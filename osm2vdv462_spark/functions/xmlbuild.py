@@ -49,14 +49,20 @@ def elem(name: str, content: Column, **attrs: Column) -> Column:
 
 
 def elem_opt(name: str, content: Column, **attrs: Column) -> Column:
-    """xmlforest-style: NULL (no element) when content is NULL."""
-    return F.when(content.isNotNull(), elem(name, esc(content.cast("string")), **attrs))
+    """xmlforest-style: NULL (no element) when content is NULL — elem is
+    STRICT already, so no guard that repeats ``content`` is needed."""
+    return elem(name, esc(content.cast("string")), **attrs)
 
 
 def xmlconcat(*parts: Column) -> Column:
-    """xmlconcat ≡ concat skipping NULLs; NULL when ALL parts are NULL."""
-    joined = F.concat_ws("", *parts)
-    return F.when(joined != "", joined)
+    """xmlconcat ≡ concat skipping NULLs; NULL when ALL parts are NULL.
+
+    ``nullif`` evaluates the joined string once (the optimizer moves it
+    into its own projection). A guard that repeats the subtree doubles
+    the generated code at every nesting level, which pushes the
+    SITE_PATH_LINK fragment past the JVM's 64 KB method limit and makes
+    whole-stage codegen fall back."""
+    return F.nullif(F.concat_ws("", *parts), F.lit(""))
 
 
 _RENDER_UDFS: dict = {}
@@ -134,14 +140,12 @@ def _num_str_lambda(col: Column) -> Column:
 
 
 def key_value(key: str, value: Column) -> Column:
-    """create_KeyValue (SP:249-257): NULL when value NULL (STRICT)."""
-    return F.when(
-        value.isNotNull(),
-        F.concat(
-            F.lit(f"<KeyValue><Key>{key}</Key><Value>"),
-            esc(value.cast("string")),
-            F.lit("</Value></KeyValue>"),
-        ),
+    """create_KeyValue (SP:249-257): NULL when value NULL (STRICT, as
+    concat is)."""
+    return F.concat(
+        F.lit(f"<KeyValue><Key>{key}</Key><Value>"),
+        esc(value.cast("string")),
+        F.lit("</Value></KeyValue>"),
     )
 
 
@@ -154,7 +158,7 @@ def delfi_check(key: str, val: Column, *accepted: str) -> Column:
 
 def key_list(inner: Column) -> Column:
     """create_keyList (SP:283-293): STRICT — no element when inner NULL."""
-    return F.when(inner.isNotNull(), F.concat(F.lit("<keyList>"), inner, F.lit("</keyList>")))
+    return F.concat(F.lit("<keyList>"), inner, F.lit("</keyList>"))
 
 
 # ------------------------------------------------------------ simple leaf

@@ -49,31 +49,35 @@ def connected_components(
         .observe(obs_e, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    labels = vertices.select(
-        F.col(vid).alias("a"), F.col(vid).alias("component")
-    ).localCheckpoint(eager=True)
     # size the per-iteration shuffles to the GRAPH, not the session
     # default: at gate scale a 100-edge graph under a 64-partition
     # default burns hundreds of empty tasks per iteration; at 10^12
-    # edges the same formula scales the partition count with the data
+    # edges the same formula scales the partition count with the data.
+    # Every shuffle below is an explicit repartition(n, key) — the
+    # session-wide spark.sql.shuffle.partitions is never touched, so
+    # concurrent callers (the export's stage DAG) plan with their own
+    # setting.
     n_edges = int(obs_e.get["n"] or 0)
-    parts = str(max(2, min(2048, n_edges // 500_000 + 2)))
-    spark = edges.sparkSession
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try:
-        return _cc_loop(sym, labels, vid, max_iter)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
+    parts = max(2, min(2048, n_edges // 500_000 + 2))
+    labels = (
+        vertices.select(F.col(vid).alias("a"), F.col(vid).alias("component"))
+        .repartition(parts, "a")
+        .localCheckpoint(eager=True)
+    )
+    return _cc_loop(sym.repartition(parts, "b"), labels, vid, max_iter, parts)
 
 
-def _cc_loop(sym, labels, vid: str, max_iter: int) -> DataFrame:
+def _cc_loop(sym, labels, vid: str, max_iter: int, parts: int) -> DataFrame:
+    """``sym`` hash-partitioned on b and ``labels`` on a, both into
+    ``parts``: the join is co-partitioned, the neighbour minimum is
+    re-keyed on a explicitly, and the label join reuses that layout."""
     from pyspark.sql import Observation
 
     for _ in range(max_iter):
         # neighbor minimum
         nbr_min = (
             sym.join(labels.withColumnRenamed("a", "b2"), sym.b == F.col("b2"))
+            .repartition(parts, "a")
             .groupBy("a")
             .agg(F.min("component").alias("nbr_component"))
         )

@@ -14,6 +14,8 @@ by (category_rank, id).
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import xmlbuild as X
@@ -199,16 +201,9 @@ def export_data(
 
 
 _TEMPLATE_CACHE: dict = {}
-_TEMPLATE_LOCK = None
-
-
-def _template_lock():
-    global _TEMPLATE_LOCK
-    if _TEMPLATE_LOCK is None:
-        import threading
-
-        _TEMPLATE_LOCK = threading.RLock()
-    return _TEMPLATE_LOCK
+# created at import: a lazily created lock lets two threads that race
+# the first build each create (and hold) a different lock
+_TEMPLATE_LOCK = threading.RLock()
 
 
 def prewarm_templates(spark: SparkSession):
@@ -242,7 +237,7 @@ def _stop_place_templates(spark: SparkSession) -> dict:
     hit = _TEMPLATE_CACHE.get(key)
     if hit is not None:
         return hit
-    with _template_lock():
+    with _TEMPLATE_LOCK:
         return _build_templates(key)
 
 
@@ -542,10 +537,20 @@ def xml_organisations(organisations: DataFrame) -> DataFrame:
     )
 
 
+def collect_parkings(parking_xml: DataFrame) -> list[str]:
+    """Parking fragments in document order."""
+    return [r["xml"] for r in parking_xml.orderBy("relation_id", "xml").collect()]
+
+
+def collect_organisations(organisation_xml: DataFrame) -> list[str]:
+    """Organisation fragments in document order."""
+    return [r["xml"] for r in organisation_xml.orderBy("type", "id").collect()]
+
+
 def assemble_document(
     stop_place_xml: DataFrame,
-    parking_xml: DataFrame,
-    organisation_xml: DataFrame,
+    parking_xml: DataFrame | list[str],
+    organisation_xml: DataFrame | list[str],
     timestamp: str = "2024-01-01T00:00:00",
     timezone: str = "Europe/Berlin",
     language: str = "de",
@@ -553,10 +558,17 @@ def assemble_document(
 ) -> str:
     """export.sql:5-44: the grand aggregation (A9) — deterministic order,
     driver-side concat of per-row fragments (output is ONE document; size
-    bounded by stop-place count)."""
+    bounded by stop-place count). ``parking_xml`` / ``organisation_xml``
+    may also be the fragment lists collect_parkings /
+    collect_organisations returned earlier (the runner collects them as
+    soon as their inputs exist)."""
     sp = [r["xml"] for r in stop_place_xml.orderBy("relation_id").collect()]
-    pk = [r["xml"] for r in parking_xml.orderBy("relation_id", "xml").collect()]
-    og = [r["xml"] for r in organisation_xml.orderBy("type", "id").collect()]
+    pk = parking_xml if isinstance(parking_xml, list) else collect_parkings(parking_xml)
+    og = (
+        organisation_xml
+        if isinstance(organisation_xml, list)
+        else collect_organisations(organisation_xml)
+    )
     forest = ""
     if sp:
         forest += "<stopPlaces>" + "".join(sp) + "</stopPlaces>"

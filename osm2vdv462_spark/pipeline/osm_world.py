@@ -75,10 +75,13 @@ def assemble_way_geometries(pbf_df: DataFrame) -> DataFrame:
     )
 
 
-def world_from_pbf(spark: SparkSession, path: str) -> dict[str, DataFrame]:
+def world_from_pbf(
+    spark: SparkSession, path: str, cached: list | None = None
+) -> dict[str, DataFrame]:
     """The stop-places pipeline's input tables (world_dfs schemas) from
     a real extract: scan -> dispatch -> geometry assembly -> per-table
-    projection."""
+    projection. The raw scan and the dispatched base are cached; both
+    are appended to ``cached`` so the caller can release them."""
     raw = _pbf.read_pbf(spark, path).cache()
     dispatched = _extract.dispatch(_pbf.elements_for_dispatch(raw)).select(
         "osm_id", "osm_type", "target_table", "ifopt"
@@ -129,6 +132,8 @@ def world_from_pbf(spark: SparkSession, path: str) -> dict[str, DataFrame]:
         )
         .cache()
     )
+    if cached is not None:
+        cached.extend([raw, base])
 
     def table(name):
         return base.filter(F.col("target_table") == name)

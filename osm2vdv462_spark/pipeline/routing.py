@@ -385,15 +385,19 @@ _TALL_SCHEMA = (
 
 
 def stitch_path_links(
-    routes: DataFrame,
+    routes: DataFrame, cached: list | None = None
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Run the stitcher per route group; returns (path_links,
     access_spaces, paths_elements_ref) with the reference's dedup rules:
     path_links unique on content hash (≡ ON CONFLICT (edge, sha) DO
     NOTHING), access_spaces unique on (node_id, level) (PK,
-    02_setup.sql:96), refs unique on all columns (02_setup.sql:35)."""
+    02_setup.sql:96), refs unique on all columns (02_setup.sql:35).
+    All three read one cached stitcher output, appended to ``cached``
+    so the caller can release it."""
     tall = routes.groupBy("route_key").applyInPandas(_stitch_group, _TALL_SCHEMA)
     tall = tall.cache()
+    if cached is not None:
+        cached.append(tall)
     path_links = (
         tall.filter(F.col("kind") == "link")
         .select(

@@ -1,21 +1,119 @@
-"""End-to-end pipeline runner with checkpoint/resume.
+"""End-to-end pipeline runner with checkpoint/resume, run as a
+concurrent stage DAG.
 
 Drives the whole reference pipeline (ingest -> quays -> routing ->
-export, mirroring /root/reference/export.sh:30-87's five stages) through
+export, the five stages of the reference's export.sh) through
 StageCheckpoint: every stage materializes to parquet + manifest, reruns
 skip validated stages, and the final NeTEx document is written only from
 materialized inputs. This is the engine's `spark-submit` entry body.
+
+* Stage DAG: each stage names the stages it reads and goes to a small
+  thread pool in topological order. The pool is FIFO, so a stage only
+  ever waits on stages already running or done — a full pool cannot
+  deadlock. Independent chains (the world tables, quays vs entrances,
+  the parking and organisation XML) overlap instead of queueing behind
+  each other on an otherwise idle executor. Pool threads inherit the
+  caller's Spark local properties, so every job lands in the caller's
+  job group. Stage names and manifest input keys are unchanged, so
+  existing workdirs resume.
+* World first: ``world_stop_areas`` runs alone, then the other eight
+  world tables run together. The first world stage fills the shared
+  scan / dispatch caches of a ``.osm.pbf`` ingest; a cache that is
+  still being filled is not shared, so nine concurrent world stages
+  would each recompute the scan.
+* Stitch once: ``path_links``, ``access_spaces`` and
+  ``paths_elements_ref`` are three views of one stitcher output, so
+  ``synthesize_routes`` + ``stitch_path_links`` run at most once per
+  export (not at all when all three resume). ``path_links`` runs first
+  and fills the stitcher's cache, which the other two then read.
+* Cache scope: what the export persists (the pbf scan and dispatched
+  base, platforms_merged's clustered rows, the stitcher output) is
+  released when it ends, whether it succeeded or not; caches the caller
+  made stay.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 from . import export as ex_mod, routing, stop_places as sp
 from .checkpoint import StageCheckpoint
 from .world import world_dfs
+
+# stages in flight at once: enough to overlap the independent chains of
+# the DAG, few enough that their jobs do not crowd a small executor
+POOL_WIDTH = 4
+
+WORLD_TABLES = (
+    "stop_areas", "platforms", "platforms_edges", "stop_areas_members_ref",
+    "entrances", "pois", "highways", "parking", "organisations",
+)
+
+_EMPTY_ORGANISATIONS = (
+    "id string, label string, alternatives string, official_name string,"
+    " short_name string, website string, email string, phone string,"
+    " address string, type string"
+)
+
+
+def _once(fn):
+    """``fn`` evaluated by the first call only (thread-safe); every call
+    returns that result."""
+    lock, box = threading.Lock(), []
+
+    def call(*args):
+        with lock:
+            if not box:
+                box.append(fn(*args))
+        return box[0]
+
+    return call
+
+
+class StageDag:
+    """Named tasks on a FIFO thread pool, each called with the results
+    of the tasks it reads. A task may only name tasks added before it
+    (topological order), so a running task only waits on tasks that are
+    already running or done."""
+
+    def __init__(self, spark: SparkSession):
+        self._spark = spark
+        self._pool = ThreadPoolExecutor(POOL_WIDTH, thread_name_prefix="stage")
+        self._futures: dict = {}
+
+    def add(self, name: str, fn, *inputs: str, after: tuple = ()) -> None:
+        """``fn(*results of inputs)``, started once ``inputs`` and
+        ``after`` (ordering only) are done."""
+        reads = [self._futures[n] for n in inputs]
+        waits = [self._futures[n] for n in after]
+
+        def task():
+            for f in waits:
+                f.result()
+            return fn(*(f.result() for f in reads))
+
+        # wrapped here, on the caller's thread: the task gets its own
+        # copy of the caller's local properties (job group, tags)
+        target = inheritable_thread_target(self._spark)(task)
+        self._futures[name] = self._pool.submit(target)
+
+    def run(self) -> dict:
+        """Wait for every task and return {name: result} in the order
+        added. On the first failure the tasks not yet started are
+        cancelled, the running ones finish, and the failure is raised."""
+        try:
+            wait(self._futures.values(), return_when=FIRST_EXCEPTION)
+        finally:
+            self._pool.shutdown(wait=True, cancel_futures=True)
+        for f in self._futures.values():
+            if not f.cancelled() and f.exception() is not None:
+                raise f.exception()
+        return {n: f.result() for n, f in self._futures.items()}
 
 
 def run_full_pipeline(
@@ -37,140 +135,129 @@ def run_full_pipeline(
     # overlap the ~2-3 s XML-template construction with the stage jobs
     # below (no-op when the per-app template cache is already warm)
     ex_mod.prewarm_templates(spark)
+    cached: list = []  # everything this export persists
     if pbf_path is not None:
         gen = {"generator": f"pbf:{os.path.abspath(pbf_path)}"}
-        # world_from_pbf runs the scan + dispatch + the ref->node
-        # geometry-assembly shuffle (THE big shuffle of any OSM
-        # ingest) — run it once and index into the memoized dict, not
-        # once per world table.
-        pbf_world: dict = {}
 
-        def _source(name):
+        def build_source():
             from . import osm_world
 
-            if name == "organisations":
-                return spark.createDataFrame(
-                    [],
-                    "id string, label string, alternatives string,"
-                    " official_name string, short_name string,"
-                    " website string, email string, phone string,"
-                    " address string, type string",
-                )
-            if not pbf_world:
-                pbf_world.update(osm_world.world_from_pbf(spark, pbf_path))
-            return pbf_world[name]
+            # one scan + dispatch + ref->node geometry-assembly shuffle
+            # (THE big shuffle of any OSM ingest) for all nine tables
+            tables = osm_world.world_from_pbf(spark, pbf_path, cached)
+            tables["organisations"] = spark.createDataFrame(
+                [], _EMPTY_ORGANISATIONS
+            )
+            return tables
+
+        source = _once(build_source)
     else:
         gen = {"generator": f"world:n={n_areas}:seed={seed}"}
+        source = _once(lambda: world_dfs(spark, n_areas, seed))
 
-        def _source(name):
-            return world_dfs(spark, n_areas, seed)[name]
+    dag = StageDag(spark)
 
-    world = {}
+    def stage(name, build, after=(), **inputs):
+        """Checkpoint stage ``name``: ``inputs`` maps each manifest
+        snapshot key to the stage it reads; ``build`` gets their
+        frames in that order."""
 
-    def w(name):
-        # world tables materialized once (the 'osm2pgsql ingest' stage)
-        if name not in world:
-            world[name] = ck.materialize(
-                f"world_{name}", lambda: _source(name), gen
-            )
-        return world[name]
+        def run(*frames):
+            snaps = {key: ck.snapshot_of(s) for key, s in inputs.items()}
+            return ck.materialize(name, lambda: build(*frames), snaps)
 
-    for t in [
-        "stop_areas", "stop_areas_members_ref", "platforms", "platforms_edges",
-        "entrances", "pois", "highways", "parking", "organisations",
-    ]:
-        w(t)
-    if pbf_path is not None:
-        spark.catalog.clearCache()  # the raw scan cache served its purpose
+        dag.add(name, run, *inputs.values(), after=after)
 
-    dep = lambda *names: {n: ck.snapshot_of(f"world_{n}") for n in names}
+    def world(t):
+        dag.add(
+            f"world_{t}",
+            lambda: ck.materialize(f"world_{t}", lambda: source()[t], gen),
+            after=() if t == "stop_areas" else ("world_stop_areas",),
+        )
 
-    pww = ck.materialize(
-        "platforms_with_width",
-        lambda: sp.platforms_with_width(w("platforms")),
-        dep("platforms"),
+    # submission order is start order: the quay chain (the critical
+    # path) goes ahead of the world tables it does not read
+    for t in WORLD_TABLES[:4]:
+        world(t)
+    stage("platforms_with_width", sp.platforms_with_width,
+          platforms="world_platforms")
+    stage("platforms_split", sp.platforms_split,
+          pww="platforms_with_width", platforms_edges="world_platforms_edges")
+    for t in WORLD_TABLES[4:]:
+        world(t)
+    stage("platforms_merged", lambda split: sp.platforms_merged(split, cached),
+          split="platforms_split")
+    stage("final_quays", sp.final_quays, merged="platforms_merged",
+          stop_areas_members_ref="world_stop_areas_members_ref")
+    stage("final_entrances", sp.final_entrances, entrances="world_entrances",
+          stop_areas_members_ref="world_stop_areas_members_ref")
+    stage("stop_area_edges", routing.stop_area_edges,
+          fq="final_quays", fe="final_entrances")
+
+    stitched = _once(
+        lambda edges: routing.stitch_path_links(
+            routing.synthesize_routes(edges), cached
+        )
     )
-    split = ck.materialize(
-        "platforms_split",
-        lambda: sp.platforms_split(pww, w("platforms_edges")),
-        {"pww": ck.snapshot_of("platforms_with_width"), **dep("platforms_edges")},
-    )
-    merged = ck.materialize(
-        "platforms_merged",
-        lambda: sp.platforms_merged(split),
-        {"split": ck.snapshot_of("platforms_split")},
-    )
-    fq = ck.materialize(
-        "final_quays",
-        lambda: sp.final_quays(merged, w("stop_areas_members_ref")),
-        {"merged": ck.snapshot_of("platforms_merged"),
-         **dep("stop_areas_members_ref")},
-    )
-    fe = ck.materialize(
-        "final_entrances",
-        lambda: sp.final_entrances(w("entrances"), w("stop_areas_members_ref")),
-        dep("entrances", "stop_areas_members_ref"),
-    )
-    edges = ck.materialize(
-        "stop_area_edges",
-        lambda: routing.stop_area_edges(fq, fe),
-        {"fq": ck.snapshot_of("final_quays"), "fe": ck.snapshot_of("final_entrances")},
-    )
+    stage("path_links", lambda e: stitched(e)[0], edges="stop_area_edges")
+    stage("access_spaces", lambda e: stitched(e)[1], after=("path_links",),
+          edges="stop_area_edges")
+    stage("paths_elements_ref", lambda e: stitched(e)[2],
+          after=("path_links",), edges="stop_area_edges")
 
-    def _stitched(which):
-        routes = routing.synthesize_routes(edges)
-        links, access, refs = routing.stitch_path_links(routes)
-        return {"links": links, "access": access, "refs": refs}[which]
+    stage("final_access_spaces", sp.final_access_spaces,
+          access="access_spaces", pois="world_pois")
+    stage("final_site_path_links", routing.final_site_path_links,
+          links="path_links", refs="paths_elements_ref",
+          highways="world_highways")
 
-    edep = {"edges": ck.snapshot_of("stop_area_edges")}
-    links = ck.materialize("path_links", lambda: _stitched("links"), edep)
-    access = ck.materialize("access_spaces", lambda: _stitched("access"), edep)
-    refs = ck.materialize("paths_elements_ref", lambda: _stitched("refs"), edep)
-
-    facc = ck.materialize(
-        "final_access_spaces",
-        lambda: sp.final_access_spaces(access, w("pois")),
-        {"access": ck.snapshot_of("access_spaces"), **dep("pois")},
-    )
-    fspl = ck.materialize(
-        "final_site_path_links",
-        lambda: routing.final_site_path_links(links, refs, w("highways")),
-        {"links": ck.snapshot_of("path_links"),
-         "refs": ck.snapshot_of("paths_elements_ref"), **dep("highways")},
-    )
-    ed = ck.materialize(
-        "export_data",
-        lambda: ex_mod.export_data(
-            ex_mod.final_stop_places(
-                ex_mod.stop_places_with_geometry(
-                    ex_mod.stop_places_with_organisations(
-                        w("stop_areas"), w("organisations")
-                    ),
-                    w("stop_areas_members_ref"),
-                    w("platforms"),
-                ),
-                fq, fe, facc,
+    def export_data(fq, fe, facc, fspl, stop_areas, orgs, members, platforms):
+        fsp = ex_mod.final_stop_places(
+            ex_mod.stop_places_with_geometry(
+                ex_mod.stop_places_with_organisations(stop_areas, orgs),
+                members,
+                platforms,
             ),
-            fq, fe, facc, fspl,
+            fq, fe, facc,
+        )
+        return ex_mod.export_data(fsp, fq, fe, facc, fspl)
+
+    stage("export_data", export_data,
+          fq="final_quays", fe="final_entrances", facc="final_access_spaces",
+          fspl="final_site_path_links", stop_areas="world_stop_areas",
+          organisations="world_organisations",
+          stop_areas_members_ref="world_stop_areas_members_ref",
+          platforms="world_platforms")
+
+    # parking and organisation XML need world tables only: collected as
+    # soon as those exist, not after the stop-place chain
+    dag.add(
+        "parking_xml",
+        lambda parking, members: ex_mod.collect_parkings(
+            ex_mod.xml_parkings(ex_mod.export_parkings_data(parking, members))
         ),
-        {
-            "fq": ck.snapshot_of("final_quays"),
-            "fe": ck.snapshot_of("final_entrances"),
-            "facc": ck.snapshot_of("final_access_spaces"),
-            "fspl": ck.snapshot_of("final_site_path_links"),
-            **dep("stop_areas", "organisations", "stop_areas_members_ref", "platforms"),
-        },
+        "world_parking", "world_stop_areas_members_ref",
+    )
+    dag.add(
+        "organisation_xml",
+        lambda orgs: ex_mod.collect_organisations(ex_mod.xml_organisations(orgs)),
+        "world_organisations",
     )
 
-    doc = ex_mod.assemble_document(
-        ex_mod.xml_stop_places(ed),
-        ex_mod.xml_parkings(
-            ex_mod.export_parkings_data(w("parking"), w("stop_areas_members_ref"))
-        ),
-        ex_mod.xml_organisations(w("organisations")),
-        timestamp=timestamp,
-    )
+    try:
+        res = dag.run()
+        doc = ex_mod.assemble_document(
+            ex_mod.xml_stop_places(res["export_data"]),
+            res["parking_xml"],
+            res["organisation_xml"],
+            timestamp=timestamp,
+        )
+    finally:
+        for df in cached:
+            df.unpersist()
     doc_path = os.path.join(workdir, "netex_export.xml")
     with open(doc_path, "w") as fh:
         fh.write(doc)
-    return {"document": doc_path, "stats": ck.stats}
+    # stats in DAG order, not completion order
+    return {"document": doc_path,
+            "stats": {n: ck.stats[n] for n in res if n in ck.stats}}

@@ -104,11 +104,13 @@ def platforms_split(pww: DataFrame, platforms_edges: DataFrame) -> DataFrame:
     return _finish(with_edge, True).unionByName(_finish(unmatched, False))
 
 
-def platforms_merged(split: DataFrame) -> DataFrame:
+def platforms_merged(split: DataFrame, cached: list | None = None) -> DataFrame:
     """SP:1048-1065 platforms_merged: global eps=0 DBSCAN (= connected
     components of the intersects graph), then GROUP BY (IFOPT, cluster):
     first (osm_id, osm_type) in pinned order, ST_Union geometry,
-    jsonb_combine tags (last-key-wins in pinned order)."""
+    jsonb_combine tags (last-key-wins in pinned order). The clustered
+    rows both aggregations read are cached and appended to ``cached``
+    so the caller can release them."""
     # content-hash row id (stable across recomputation, unlike
     # monotonically_increasing_id); rows identical in all four fields
     # would cluster identically anyway
@@ -130,6 +132,8 @@ def platforms_merged(split: DataFrame) -> DataFrame:
         rows.select(F.col("_row").alias("id")), pairs, vid="id", src="src", dst="dst"
     )
     clustered = rows.join(comp, rows["_row"] == comp["id"]).drop("id").cache()
+    if cached is not None:
+        cached.append(clustered)
 
     # pinned merge order: (osm_id, osm_type). Structs with maps are not
     # orderable in Spark, so geometry/id aggregation and the last-wins tag

@@ -28,6 +28,15 @@ def pytest_collection_modifyitems(config, items):
     from osm2vdv462_spark import queries as q
 
     gate = set(q.queries())
+    # the concurrent stage-DAG runner's guards (determinism, failure,
+    # stitch-once, job group, cache scope) run per change
+    runner_quick = {
+        "test_two_parallelism_levels_byte_identical",
+        "test_failed_stage_reraises_then_resumes",
+        "test_stitcher_runs_once_cold_and_never_resumed",
+        "test_every_cold_job_in_callers_group",
+        "test_pbf_export_releases_only_its_own_caches",
+    }
     seen_mod: set[str] = set()
     for item in items:
         mod = item.module.__name__
@@ -42,6 +51,8 @@ def pytest_collection_modifyitems(config, items):
                 item.add_marker(pytest.mark.quick)
         elif mod == "test_real_world":
             item.add_marker(pytest.mark.slow)
+        elif mod == "test_checkpoint" and item.name in runner_quick:
+            item.add_marker(pytest.mark.quick)
         elif mod not in seen_mod:
             # one representative per operator-family module
             item.add_marker(pytest.mark.quick)

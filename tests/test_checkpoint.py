@@ -2,16 +2,55 @@
 
 import json
 import os
+import threading
 
 import pytest
 
 from osm2vdv462_spark.pipeline.runner import run_full_pipeline
 
 
+class _StitchCounter:
+    """Counts calls into routing.stitch_path_links while active."""
+
+    def __enter__(self):
+        from osm2vdv462_spark.pipeline import routing
+
+        self.calls, self._real = 0, routing.stitch_path_links
+
+        def counting(*args, **kwargs):
+            self.calls += 1
+            return self._real(*args, **kwargs)
+
+        routing.stitch_path_links = counting
+        return self
+
+    def __exit__(self, *exc):
+        from osm2vdv462_spark.pipeline import routing
+
+        routing.stitch_path_links = self._real
+
+
 @pytest.fixture(scope="module")
 def first_run(spark, tmp_path_factory):
+    """The module's cold run, under its own job group, with the
+    stitcher's calls and the jobs outside the group recorded."""
     wd = str(tmp_path_factory.mktemp("ckpt"))
-    out = run_full_pipeline(spark, wd, n_areas=2, seed=42)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("ckpt-cold", "cold export")
+    try:
+        with _StitchCounter() as stitch:
+            out = run_full_pipeline(spark, wd, n_areas=2, seed=42)
+    finally:
+        sc._jsc.clearJobGroup()
+    out["probe"] = {
+        "stitch_calls": stitch.calls,
+        "jobs": set(tracker.getJobIdsForGroup("ckpt-cold")),
+        "ungrouped": set(tracker.getJobIdsForGroup(None)) - ungrouped,
+    }
+    # later tests rewrite this workdir's document; keep the first one
+    out["document_text"] = open(out["document"]).read()
     return wd, out
 
 
@@ -42,6 +81,19 @@ class TestCheckpoint:
         # content hashes stable across runs
         for name, s in out2["stats"].items():
             assert s["content_hash"] == out1["stats"][name]["content_hash"]
+
+    def test_stitcher_runs_once_cold_and_never_resumed(self, spark, first_run):
+        wd, out = first_run
+        assert out["probe"]["stitch_calls"] == 1
+        with _StitchCounter() as stitch:
+            resumed = run_full_pipeline(spark, wd, n_areas=2, seed=42)
+        assert all(s["skipped"] for s in resumed["stats"].values())
+        assert stitch.calls == 0
+
+    def test_every_cold_job_in_callers_group(self, first_run):
+        probe = first_run[1]["probe"]
+        assert probe["jobs"]
+        assert probe["ungrouped"] == set()
 
     def test_partial_resume_after_manifest_loss(self, spark, first_run):
         wd, out1 = first_run
@@ -76,6 +128,115 @@ class TestCheckpoint:
         out = run_full_pipeline(spark, wd, n_areas=1, seed=7)  # new generator
         assert not out["stats"]["world_platforms"]["skipped"]
         assert not out["stats"]["final_quays"]["skipped"]
+
+
+class TestStageDag:
+    """The runner's concurrent stage DAG under a failing stage."""
+
+    def test_failed_stage_reraises_then_resumes(
+        self, spark, tmp_path, monkeypatch, first_run
+    ):
+        from osm2vdv462_spark.pipeline import stop_places
+
+        def broken(*args, **kwargs):
+            raise RuntimeError("final_entrances broke")
+
+        monkeypatch.setattr(stop_places, "final_entrances", broken)
+        wd = str(tmp_path / "fail")
+        failure: list = []
+
+        def run():
+            try:
+                run_full_pipeline(spark, wd, n_areas=2, seed=42)
+            except Exception as e:
+                failure.append(e)
+
+        t = threading.Thread(target=run, daemon=True)
+        t.start()
+        t.join(timeout=600)
+        assert not t.is_alive(), "runner hung after a failed stage"
+        assert len(failure) == 1 and "final_entrances broke" in str(failure[0])
+        assert not os.path.exists(os.path.join(wd, "netex_export.xml"))
+        upstream = ["world_stop_areas", "world_entrances",
+                    "world_stop_areas_members_ref"]
+        for name in upstream:
+            assert os.path.exists(os.path.join(wd, f"{name}.manifest.json")), name
+        assert not os.path.exists(os.path.join(wd, "final_entrances.manifest.json"))
+
+        monkeypatch.undo()
+        out = run_full_pipeline(spark, wd, n_areas=2, seed=42)
+        st = out["stats"]
+        assert all(st[name]["skipped"] for name in upstream)
+        assert not st["final_entrances"]["skipped"]
+        assert open(out["document"]).read() == first_run[1]["document_text"]
+
+
+def _tiny_extract(spark, path: str) -> None:
+    """One stop area with two platforms, an entrance, a footway and a
+    parking lot, as a single-file .osm.pbf."""
+    from osm2vdv462_spark.sources import pbf
+
+    rows, nid = [], [100]
+
+    def node(osm_id, lon, lat, tags=None):
+        rows.append(("node", osm_id, lon, lat, tags, None, None, None, None))
+
+    def ring(osm_id, x, y, tags, w=0.0004, h=0.0001):
+        refs = []
+        for dx, dy in ((0, 0), (w, 0), (w, h), (0, h)):
+            node(nid[0], x + dx, y + dy)
+            refs.append(nid[0])
+            nid[0] += 1
+        rows.append(("way", osm_id, None, None, tags, refs + refs[:1],
+                     None, None, None))
+
+    ring(11, 11.5, 48.1, {"public_transport": "platform",
+                          "ref:IFOPT": "de:1:1:1", "ref": "1"})
+    ring(12, 11.5, 48.1005, {"public_transport": "platform",
+                             "ref:IFOPT": "de:1:1:2", "ref": "2"})
+    ring(40, 11.499, 48.099, {"amenity": "parking", "capacity": "5"})
+    node(20, 11.5006, 48.1002, {"entrance": "main", "level": "0"})
+    node(21, 11.5, 48.1002)
+    node(22, 11.5006, 48.1002)
+    rows.append(("way", 30, None, None, {"highway": "footway"}, [21, 22],
+                 None, None, None))
+    rows.append(("relation", 1, None, None,
+                 {"type": "public_transport", "public_transport": "stop_area",
+                  "ref:IFOPT": "de:1:1", "name": "Tiny"},
+                 None, ["way", "way", "node", "way"], [11, 12, 20, 40],
+                 ["platform", "platform", "", ""]))
+    pbf.write_pbf(spark.createDataFrame(rows, pbf.PBF_SCHEMA), path)
+
+
+def test_pbf_export_releases_only_its_own_caches(spark, tmp_path):
+    import gc
+    import time
+
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+
+    def persistent_rdds() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    path = str(tmp_path / "tiny.osm.pbf")
+    _tiny_extract(spark, path)
+    mine = spark.range(0, 100).select((F.col("id") * 7).alias("x")).cache()
+    mine.count()
+    before = persistent_rdds()
+    out = run_full_pipeline(spark, str(tmp_path / "run"), pbf_path=path)
+    assert "<StopPlace " in open(out["document"]).read()
+    assert mine.storageLevel.useMemory  # the caller's cache survives
+    # the stages' localCheckpoint RDDs are garbage once the export ends
+    # and go with the next GC; a cache left registered never goes
+    deadline = time.time() + 60
+    while not persistent_rdds() <= before and time.time() < deadline:
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(0.5)
+    assert persistent_rdds() <= before
+    assert mine.storageLevel.useMemory
+    mine.unpersist()
 
 
 class TestObserveMetrics:
