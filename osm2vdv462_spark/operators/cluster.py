@@ -35,49 +35,35 @@ def connected_components(
     vertices: one column ``vid`` (long). edges: ``src``,``dst`` (long,
     undirected; self-loops/duplicates fine). Returns (vid, component).
     """
-    from pyspark.sql import Observation
-
     # materialize the edge list once — the loop below must not re-derive
     # its (possibly expensive: spatial-join) lineage every iteration.
-    # The edge count rides the checkpoint job via observe (guide §1.2):
-    # a separate count() was one more job per operator call.
-    obs_e = Observation()
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
-        .observe(obs_e, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    # size the per-iteration shuffles to the GRAPH, not the session
-    # default: at gate scale a 100-edge graph under a 64-partition
-    # default burns hundreds of empty tasks per iteration; at 10^12
-    # edges the same formula scales the partition count with the data.
-    # Every shuffle below is an explicit repartition(n, key) — the
-    # session-wide spark.sql.shuffle.partitions is never touched, so
-    # concurrent callers (the export's stage DAG) plan with their own
-    # setting.
-    n_edges = int(obs_e.get["n"] or 0)
-    parts = max(2, min(2048, n_edges // 500_000 + 2))
-    labels = (
-        vertices.select(F.col(vid).alias("a"), F.col(vid).alias("component"))
-        .repartition(parts, "a")
-        .localCheckpoint(eager=True)
-    )
-    return _cc_loop(sym.repartition(parts, "b"), labels, vid, max_iter, parts)
+    labels = vertices.select(
+        F.col(vid).alias("a"), F.col(vid).alias("component")
+    ).localCheckpoint(eager=True)
+    # the loop's shuffles are planned at the session's own
+    # spark.sql.shuffle.partitions, AQE coalescing the empty ones; the
+    # session conf is never changed here, so concurrent callers (the
+    # export's stage DAG) plan with their own setting. No explicit
+    # repartition either: the neighbour minimum's groupBy keeps its own
+    # exchange, so the partial (map-side) min runs before the shuffle —
+    # a repartition on "a" ahead of it would ship every directed edge
+    # row instead of the per-partition minima.
+    return _cc_loop(sym, labels, vid, max_iter)
 
 
-def _cc_loop(sym, labels, vid: str, max_iter: int, parts: int) -> DataFrame:
-    """``sym`` hash-partitioned on b and ``labels`` on a, both into
-    ``parts``: the join is co-partitioned, the neighbour minimum is
-    re-keyed on a explicitly, and the label join reuses that layout."""
+def _cc_loop(sym, labels, vid: str, max_iter: int) -> DataFrame:
     from pyspark.sql import Observation
 
     for _ in range(max_iter):
         # neighbor minimum
         nbr_min = (
             sym.join(labels.withColumnRenamed("a", "b2"), sym.b == F.col("b2"))
-            .repartition(parts, "a")
             .groupBy("a")
             .agg(F.min("component").alias("nbr_component"))
         )

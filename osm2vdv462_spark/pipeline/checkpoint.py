@@ -197,6 +197,28 @@ class StageCheckpoint:
                 )
         return files
 
+    def _valid_manifest(self, name: str, input_snapshots: dict) -> dict | None:
+        """The stored manifest of ``name`` if it was made from
+        ``input_snapshots`` and its files are intact, else None."""
+        data_path, manifest_path = self._paths(name)
+        if not os.path.exists(manifest_path):
+            return None
+        try:
+            m = json.load(open(manifest_path))
+            files_ok = all(
+                os.path.getsize(os.path.join(data_path, p["file"])) == p["bytes"]
+                for p in m["partitions"]
+            )
+            if m["input_snapshots"] == input_snapshots and files_ok:
+                return m
+        except (OSError, KeyError, json.JSONDecodeError):
+            pass  # invalid manifest -> recompute
+        return None
+
+    def is_current(self, name: str, input_snapshots: dict) -> bool:
+        """Whether materialize(name, ..., input_snapshots) would skip."""
+        return self._valid_manifest(name, input_snapshots) is not None
+
     def materialize(
         self,
         name: str,
@@ -212,18 +234,10 @@ class StageCheckpoint:
         the stored manifest forces recomputation (lineage invalidation).
         """
         data_path, manifest_path = self._paths(name)
-        if not force and os.path.exists(manifest_path):
-            try:
-                m = json.load(open(manifest_path))
-                files_ok = all(
-                    os.path.getsize(os.path.join(data_path, p["file"])) == p["bytes"]
-                    for p in m["partitions"]
-                )
-                if m["input_snapshots"] == input_snapshots and files_ok:
-                    self.stats[name] = {"skipped": True, **m["metrics"]}
-                    return self.spark.read.parquet(data_path)
-            except (OSError, KeyError, json.JSONDecodeError):
-                pass  # invalid manifest -> recompute
+        m = None if force else self._valid_manifest(name, input_snapshots)
+        if m is not None:
+            self.stats[name] = {"skipped": True, **m["metrics"]}
+            return self.spark.read.parquet(data_path)
         t0 = time.time()
         df = df_fn()
         # metrics ride the WRITE job via observe (guide §1.2: don't pay a

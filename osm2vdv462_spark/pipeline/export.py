@@ -549,8 +549,8 @@ def collect_organisations(organisation_xml: DataFrame) -> list[str]:
 
 def assemble_document(
     stop_place_xml: DataFrame,
-    parking_xml: DataFrame | list[str],
-    organisation_xml: DataFrame | list[str],
+    parkings: list[str],
+    organisations: list[str],
     timestamp: str = "2024-01-01T00:00:00",
     timezone: str = "Europe/Berlin",
     language: str = "de",
@@ -558,25 +558,20 @@ def assemble_document(
 ) -> str:
     """export.sql:5-44: the grand aggregation (A9) — deterministic order,
     driver-side concat of per-row fragments (output is ONE document; size
-    bounded by stop-place count). ``parking_xml`` / ``organisation_xml``
-    may also be the fragment lists collect_parkings /
-    collect_organisations returned earlier (the runner collects them as
-    soon as their inputs exist)."""
+    bounded by stop-place count). ``parkings`` / ``organisations`` are
+    the fragment lists of collect_parkings / collect_organisations (the
+    runner collects them as soon as their inputs exist)."""
     sp = [r["xml"] for r in stop_place_xml.orderBy("relation_id").collect()]
-    pk = parking_xml if isinstance(parking_xml, list) else collect_parkings(parking_xml)
-    og = (
-        organisation_xml
-        if isinstance(organisation_xml, list)
-        else collect_organisations(organisation_xml)
-    )
     forest = ""
     if sp:
         forest += "<stopPlaces>" + "".join(sp) + "</stopPlaces>"
-    if pk:
-        forest += "<parkings>" + "".join(pk) + "</parkings>"
+    if parkings:
+        forest += "<parkings>" + "".join(parkings) + "</parkings>"
     org_forest = ""
-    if og:
-        org_forest = "<organisations>" + "".join(og) + "</organisations>"
+    if organisations:
+        org_forest = (
+            "<organisations>" + "".join(organisations) + "</organisations>"
+        )
     return (
         '<?xml version="1.0" standalone="no"?>'
         '<PublicationDelivery xmlns="http://www.netex.org.uk/netex" version="ntx:1.1">'

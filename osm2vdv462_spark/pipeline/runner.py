@@ -20,16 +20,19 @@ materialized inputs. This is the engine's `spark-submit` entry body.
   world tables run together. The first world stage fills the shared
   scan / dispatch caches of a ``.osm.pbf`` ingest; a cache that is
   still being filled is not shared, so nine concurrent world stages
-  would each recompute the scan.
+  would each recompute the scan. When ``world_stop_areas`` resumes but
+  another world table must compute, that first task fills the caches
+  on its own.
 * Stitch once: ``path_links``, ``access_spaces`` and
   ``paths_elements_ref`` are three views of one stitcher output, so
   ``synthesize_routes`` + ``stitch_path_links`` run at most once per
   export (not at all when all three resume). ``path_links`` runs first
   and fills the stitcher's cache, which the other two then read.
-* Cache scope: what the export persists (the pbf scan and dispatched
-  base, platforms_merged's clustered rows, the stitcher output) is
-  released when it ends, whether it succeeded or not; caches the caller
-  made stay.
+* Cache scope: what the export persists is released as soon as the
+  stages reading it are written — the pbf scan and dispatched base after
+  the nine world tables, platforms_merged's clustered rows after that
+  stage, the stitcher output after the three routing tables — and all
+  of it when a stage fails. Caches the caller made stay.
 """
 
 from __future__ import annotations
@@ -102,6 +105,25 @@ class StageDag:
         target = inheritable_thread_target(self._spark)(task)
         self._futures[name] = self._pool.submit(target)
 
+    def on_success(self, names, fn) -> None:
+        """``fn()`` once every task in ``names`` has succeeded, on the
+        thread that finished the last of them (it takes no pool slot);
+        never if one of them fails or is cancelled."""
+        futures = [self._futures[n] for n in names]
+        lock, left = threading.Lock(), [len(futures)]
+
+        def done(_):
+            with lock:
+                left[0] -= 1
+                if left[0]:
+                    return
+            if all(not f.cancelled() and f.exception() is None
+                   for f in futures):
+                fn()
+
+        for f in futures:
+            f.add_done_callback(done)
+
     def run(self) -> dict:
         """Wait for every task and return {name: result} in the order
         added. On the first failure the tasks not yet started are
@@ -135,7 +157,10 @@ def run_full_pipeline(
     # overlap the ~2-3 s XML-template construction with the stage jobs
     # below (no-op when the per-app template cache is already warm)
     ex_mod.prewarm_templates(spark)
-    cached: list = []  # everything this export persists
+    # what this export persists, by the stages whose end frees it
+    scan_cached: list = []  # pbf raw scan + dispatched base: world_*
+    merge_cached: list = []  # clustered platforms: platforms_merged
+    stitch_cached: list = []  # stitcher output: the three routing tables
     if pbf_path is not None:
         gen = {"generator": f"pbf:{os.path.abspath(pbf_path)}"}
 
@@ -144,7 +169,7 @@ def run_full_pipeline(
 
             # one scan + dispatch + ref->node geometry-assembly shuffle
             # (THE big shuffle of any OSM ingest) for all nine tables
-            tables = osm_world.world_from_pbf(spark, pbf_path, cached)
+            tables = osm_world.world_from_pbf(spark, pbf_path, scan_cached)
             tables["organisations"] = spark.createDataFrame(
                 [], _EMPTY_ORGANISATIONS
             )
@@ -168,11 +193,31 @@ def run_full_pipeline(
 
         dag.add(name, run, *inputs.values(), after=after)
 
+    def first_world():
+        out = ck.materialize("world_stop_areas",
+                             lambda: source()["stop_areas"], gen)
+        # computing world_stop_areas filled the pbf scan caches; when it
+        # was skipped, fill them here if another world table will
+        # compute, or each of those would run its own scan concurrently
+        if (
+            pbf_path is not None
+            and ck.stats["world_stop_areas"]["skipped"]
+            and not all(ck.is_current(f"world_{t}", gen)
+                        for t in WORLD_TABLES[1:])
+        ):
+            source()
+            for df in scan_cached:
+                df.count()
+        return out
+
     def world(t):
+        if t == "stop_areas":
+            dag.add("world_stop_areas", first_world)
+            return
         dag.add(
             f"world_{t}",
             lambda: ck.materialize(f"world_{t}", lambda: source()[t], gen),
-            after=() if t == "stop_areas" else ("world_stop_areas",),
+            after=("world_stop_areas",),
         )
 
     # submission order is start order: the quay chain (the critical
@@ -185,7 +230,8 @@ def run_full_pipeline(
           pww="platforms_with_width", platforms_edges="world_platforms_edges")
     for t in WORLD_TABLES[4:]:
         world(t)
-    stage("platforms_merged", lambda split: sp.platforms_merged(split, cached),
+    stage("platforms_merged",
+          lambda split: sp.platforms_merged(split, merge_cached),
           split="platforms_split")
     stage("final_quays", sp.final_quays, merged="platforms_merged",
           stop_areas_members_ref="world_stop_areas_members_ref")
@@ -196,7 +242,7 @@ def run_full_pipeline(
 
     stitched = _once(
         lambda edges: routing.stitch_path_links(
-            routing.synthesize_routes(edges), cached
+            routing.synthesize_routes(edges), stitch_cached
         )
     )
     stage("path_links", lambda e: stitched(e)[0], edges="stop_area_edges")
@@ -244,17 +290,30 @@ def run_full_pipeline(
         "world_organisations",
     )
 
+    def release(frames):
+        """Unpersists ``frames`` when called (the list is read then, so
+        it may still be empty when the release is registered)."""
+        return lambda: [df.unpersist() for df in frames]
+
+    # each cache goes as soon as the stages reading it are written (the
+    # frames later stages get are read back from parquet, not these);
+    # on a failure, whatever is left goes before the error is raised
+    dag.on_success([f"world_{t}" for t in WORLD_TABLES], release(scan_cached))
+    dag.on_success(["platforms_merged"], release(merge_cached))
+    dag.on_success(["path_links", "access_spaces", "paths_elements_ref"],
+                   release(stitch_cached))
+
     try:
         res = dag.run()
-        doc = ex_mod.assemble_document(
-            ex_mod.xml_stop_places(res["export_data"]),
-            res["parking_xml"],
-            res["organisation_xml"],
-            timestamp=timestamp,
-        )
-    finally:
-        for df in cached:
-            df.unpersist()
+    except BaseException:
+        release(scan_cached + merge_cached + stitch_cached)()
+        raise
+    doc = ex_mod.assemble_document(
+        ex_mod.xml_stop_places(res["export_data"]),
+        res["parking_xml"],
+        res["organisation_xml"],
+        timestamp=timestamp,
+    )
     doc_path = os.path.join(workdir, "netex_export.xml")
     with open(doc_path, "w") as fh:
         fh.write(doc)

@@ -29,13 +29,14 @@ def pytest_collection_modifyitems(config, items):
 
     gate = set(q.queries())
     # the concurrent stage-DAG runner's guards (determinism, failure,
-    # stitch-once, job group, cache scope) run per change
+    # stitch-once, job group, cache scope, scan-cache fill) run per change
     runner_quick = {
         "test_two_parallelism_levels_byte_identical",
         "test_failed_stage_reraises_then_resumes",
         "test_stitcher_runs_once_cold_and_never_resumed",
         "test_every_cold_job_in_callers_group",
         "test_pbf_export_releases_only_its_own_caches",
+        "test_pbf_partial_world_resume_fills_scan_once",
     }
     seen_mod: set[str] = set()
     for item in items:

@@ -208,13 +208,59 @@ def _tiny_extract(spark, path: str) -> None:
     pbf.write_pbf(spark.createDataFrame(rows, pbf.PBF_SCHEMA), path)
 
 
-def test_pbf_export_releases_only_its_own_caches(spark, tmp_path):
+class _CacheCapture:
+    """Records the ``cached`` list each of the export's caching calls
+    (pbf world, platforms_merged, stitcher) was given."""
+
+    def __init__(self, monkeypatch):
+        from osm2vdv462_spark.pipeline import osm_world, routing, stop_places
+
+        self.lists: list = []
+        for mod, name in ((osm_world, "world_from_pbf"),
+                          (stop_places, "platforms_merged"),
+                          (routing, "stitch_path_links")):
+            monkeypatch.setattr(mod, name, self._wrap(getattr(mod, name)))
+
+    def _wrap(self, real):
+        def call(*args):
+            self.lists.append(args[-1])
+            return real(*args)
+
+        return call
+
+    def frames(self) -> list:
+        return [df for frames in self.lists for df in frames]
+
+
+def _scan_cache_loaded(spark, df) -> bool:
+    """Whether ``df``'s cache is registered and its buffers are filled."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    hit = cm.lookupCachedData(df._jdf)
+    return bool(
+        hit.isDefined()
+        and hit.get().cachedRepresentation().cacheBuilder()
+        .isCachedColumnBuffersLoaded()
+    )
+
+
+def test_pbf_export_releases_only_its_own_caches(spark, tmp_path, monkeypatch):
     import gc
     import time
 
     from pyspark.sql import functions as F
 
+    from osm2vdv462_spark.pipeline import export
+
     sc = spark.sparkContext
+    caches = _CacheCapture(monkeypatch)
+    at_assembly: list = []
+    real_assemble = export.assemble_document
+
+    def assemble(*args, **kwargs):
+        at_assembly.extend(df.storageLevel.useMemory for df in caches.frames())
+        return real_assemble(*args, **kwargs)
+
+    monkeypatch.setattr(export, "assemble_document", assemble)
 
     def persistent_rdds() -> set:
         return set(sc._jsc.getPersistentRDDs().keySet())
@@ -226,6 +272,11 @@ def test_pbf_export_releases_only_its_own_caches(spark, tmp_path):
     before = persistent_rdds()
     out = run_full_pipeline(spark, str(tmp_path / "run"), pbf_path=path)
     assert "<StopPlace " in open(out["document"]).read()
+    # scan + base, clustered platforms, stitcher output: each released
+    # when the stages reading it were written, before the assembly
+    assert len(caches.frames()) == 4
+    assert at_assembly == [False] * 4
+    caches.lists.clear()  # their lineage pins the stages' checkpoints
     assert mine.storageLevel.useMemory  # the caller's cache survives
     # the stages' localCheckpoint RDDs are garbage once the export ends
     # and go with the next GC; a cache left registered never goes
@@ -237,6 +288,39 @@ def test_pbf_export_releases_only_its_own_caches(spark, tmp_path):
     assert persistent_rdds() <= before
     assert mine.storageLevel.useMemory
     mine.unpersist()
+
+
+def test_pbf_partial_world_resume_fills_scan_once(spark, tmp_path, monkeypatch):
+    """world_stop_areas resumes but world_platforms must recompute: the
+    scan caches are filled before the world tables run concurrently, not
+    by each of them."""
+    from osm2vdv462_spark.pipeline import checkpoint
+
+    path = str(tmp_path / "tiny.osm.pbf")
+    _tiny_extract(spark, path)
+    wd = str(tmp_path / "run")
+    cold = run_full_pipeline(spark, wd, pbf_path=path)
+    cold_doc = open(cold["document"]).read()
+    os.remove(os.path.join(wd, "world_platforms.manifest.json"))
+
+    caches = _CacheCapture(monkeypatch)
+    loaded_at_start: list = []
+    real_materialize = checkpoint.StageCheckpoint.materialize
+
+    def materialize(self, name, *args, **kwargs):
+        if name == "world_platforms":
+            loaded_at_start.extend(
+                _scan_cache_loaded(spark, df) for df in caches.frames()
+            )
+        return real_materialize(self, name, *args, **kwargs)
+
+    monkeypatch.setattr(checkpoint.StageCheckpoint, "materialize", materialize)
+    out = run_full_pipeline(spark, wd, pbf_path=path)
+    st = out["stats"]
+    assert st["world_stop_areas"]["skipped"]
+    assert not st["world_platforms"]["skipped"]
+    assert loaded_at_start == [True, True]  # raw scan, dispatched base
+    assert open(out["document"]).read() == cold_doc
 
 
 class TestObserveMetrics:

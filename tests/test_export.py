@@ -42,7 +42,9 @@ def build_document(spark, n_areas=3):
         ex.export_parkings_data(w["parking"], w["stop_areas_members_ref"])
     )
     xorg = ex.xml_organisations(w["organisations"])
-    return ex.assemble_document(xsp, xpk, xorg), w
+    return ex.assemble_document(
+        xsp, ex.collect_parkings(xpk), ex.collect_organisations(xorg)
+    ), w
 
 
 @pytest.fixture(scope="module")
