@@ -211,9 +211,6 @@ def run_full_pipeline(
         return out
 
     def world(t):
-        if t == "stop_areas":
-            dag.add("world_stop_areas", first_world)
-            return
         dag.add(
             f"world_{t}",
             lambda: ck.materialize(f"world_{t}", lambda: source()[t], gen),
@@ -222,7 +219,8 @@ def run_full_pipeline(
 
     # submission order is start order: the quay chain (the critical
     # path) goes ahead of the world tables it does not read
-    for t in WORLD_TABLES[:4]:
+    dag.add("world_stop_areas", first_world)
+    for t in WORLD_TABLES[1:4]:
         world(t)
     stage("platforms_with_width", sp.platforms_with_width,
           platforms="world_platforms")

@@ -232,7 +232,7 @@ class _CacheCapture:
         return [df for frames in self.lists for df in frames]
 
 
-def _scan_cache_loaded(spark, df) -> bool:
+def _cache_loaded(spark, df) -> bool:
     """Whether ``df``'s cache is registered and its buffers are filled."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     hit = cm.lookupCachedData(df._jdf)
@@ -310,7 +310,7 @@ def test_pbf_partial_world_resume_fills_scan_once(spark, tmp_path, monkeypatch):
     def materialize(self, name, *args, **kwargs):
         if name == "world_platforms":
             loaded_at_start.extend(
-                _scan_cache_loaded(spark, df) for df in caches.frames()
+                _cache_loaded(spark, df) for df in caches.frames()
             )
         return real_materialize(self, name, *args, **kwargs)
 
