@@ -345,7 +345,6 @@ def strongly_connected_components(
     >= 1 SCC; with hash-random ids the expected outer depth is
     O(log n). Deterministic for a given input. Returns (vid, scc_id)
     with scc_id = min member id."""
-    spark = edges.sparkSession
     e_all = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -357,18 +356,6 @@ def strongly_connected_components(
         .distinct()
         .localCheckpoint(eager=True)
     )
-    # size per-round shuffles to the graph, as connected_components does
-    n_edges = e_all.count()
-    parts = str(max(2, min(2048, n_edges // 500_000 + 2)))
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
-    try:
-        return _scc_loop(e_all, active, vid, max_outer, max_inner)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-
-
-def _scc_loop(e_all, active, vid, max_outer, max_inner):
     done = None
     for _ in range(max_outer):
         if active.limit(1).count() == 0:

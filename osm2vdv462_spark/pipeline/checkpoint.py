@@ -25,12 +25,15 @@ import os
 import time
 from dataclasses import dataclass, field
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-def _canonical_cols(schema) -> list:
-    """Hashable column list: map columns canonicalized to sorted entry
-    arrays (Spark forbids hashing maps — internal order unspecified)."""
+def _hash_sum(schema):
+    """Aggregate of the content hash: sum of each row's xxhash64 over
+    all columns, map columns canonicalized to sorted entry arrays first
+    (Spark forbids hashing maps — internal order unspecified). Reduce
+    the sum mod 2^63 for the hash."""
     from pyspark.sql.types import MapType
 
     cols = []
@@ -39,120 +42,20 @@ def _canonical_cols(schema) -> list:
         if isinstance(f_.dataType, MapType):
             c = F.array_sort(F.map_entries(c))
         cols.append(c)
-    return cols
-
-
-def _thrift_varint(buf: bytes, p: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        b = buf[p]
-        p += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, p
-        shift += 7
-
-
-def _thrift_zigzag(buf: bytes, p: int) -> tuple[int, int]:
-    u, p = _thrift_varint(buf, p)
-    return (u >> 1) ^ -(u & 1), p
-
-
-def _thrift_skip(buf: bytes, p: int, ftype: int) -> int:
-    """Skip one thrift-compact value of the given wire type."""
-    if ftype in (1, 2):  # BOOL_TRUE / BOOL_FALSE: value lives in the nibble
-        return p
-    if ftype == 3:  # BYTE
-        return p + 1
-    if ftype in (4, 5, 6):  # I16 / I32 / I64: zigzag varint
-        _, p = _thrift_varint(buf, p)
-        return p
-    if ftype == 7:  # DOUBLE
-        return p + 8
-    if ftype == 8:  # BINARY: length varint + payload
-        ln, p = _thrift_varint(buf, p)
-        return p + ln
-    if ftype in (9, 10):  # LIST / SET: (size<<4 | elemtype), size 15 -> varint
-        head = buf[p]
-        p += 1
-        size, etype = head >> 4, head & 0x0F
-        if size == 0xF:
-            size, p = _thrift_varint(buf, p)
-        for _ in range(size):
-            p = _thrift_skip(buf, p, etype)
-        return p
-    if ftype == 11:  # MAP: size varint, then (ktype<<4 | vtype) if size
-        size, p = _thrift_varint(buf, p)
-        if size:
-            kv = buf[p]
-            p += 1
-            kt, vt = kv >> 4, kv & 0x0F
-            for _ in range(size):
-                p = _thrift_skip(buf, p, kt)
-                p = _thrift_skip(buf, p, vt)
-        return p
-    if ftype == 12:  # STRUCT: fields until STOP
-        fid = 0
-        while True:
-            h = buf[p]
-            p += 1
-            if h == 0:
-                return p
-            delta, t = h >> 4, h & 0x0F
-            if delta:
-                fid += delta
-            else:
-                fid, p = _thrift_zigzag(buf, p)
-            p = _thrift_skip(buf, p, t)
-    raise ValueError(f"unknown thrift compact type {ftype}")
+    return F.sum(
+        F.pmod(F.xxhash64(*cols), F.lit(2**61 - 1)).cast("decimal(38,0)")
+    )
 
 
 def parquet_num_rows(path: str) -> int:
-    """Row count of one parquet file read straight from its footer
-    (FileMetaData field 3, thrift compact) — no pyarrow, no file-body
-    read, no Spark job. Validated against Spark-computed counts in
-    tests/test_checkpoint.py."""
-    size = os.path.getsize(path)
-    with open(path, "rb") as f:
-        f.seek(size - 8)
-        tail = f.read(8)
-        if tail[4:] != b"PAR1":
-            raise ValueError(f"{path}: not a parquet file (bad magic)")
-        mlen = int.from_bytes(tail[:4], "little")
-        f.seek(size - 8 - mlen)
-        buf = f.read(mlen)
-    p = 0
-    fid = 0
-    while p < len(buf):
-        h = buf[p]
-        p += 1
-        if h == 0:
-            break
-        delta, t = h >> 4, h & 0x0F
-        if delta:
-            fid += delta
-        else:
-            fid, p = _thrift_zigzag(buf, p)
-        if fid == 3 and t == 6:
-            v, _ = _thrift_varint(buf, p)
-            return (v >> 1) ^ -(v & 1)
-        p = _thrift_skip(buf, p, t)
-    raise ValueError(f"{path}: FileMetaData.num_rows not found")
+    """Row count of one parquet file from its footer — no file-body
+    read, no Spark job."""
+    return pq.read_metadata(path).num_rows
 
 
 def content_hash(df: DataFrame) -> int:
-    """Order-insensitive 63-bit content hash over all columns.
-
-    Map columns are canonicalized to sorted entry arrays first (Spark
-    forbids hashing maps because their internal order is unspecified).
-    """
-    cols = _canonical_cols(df.schema)
-    row = df.select(
-        F.sum(
-            F.pmod(F.xxhash64(*cols), F.lit(2**61 - 1)).cast("decimal(38,0)")
-        ).alias("h")
-    ).collect()[0]
+    """Order-insensitive 63-bit content hash over all columns."""
+    row = df.select(_hash_sum(df.schema).alias("h")).collect()[0]
     return int(row["h"] or 0) % (2**63)
 
 
@@ -248,13 +151,10 @@ class StageCheckpoint:
         from pyspark.sql import Observation
 
         obs = Observation()
-        cols = _canonical_cols(df.schema)
         df = df.observe(
             obs,
             F.count(F.lit(1)).alias("rows"),
-            F.sum(
-                F.pmod(F.xxhash64(*cols), F.lit(2**61 - 1)).cast("decimal(38,0)")
-            ).alias("h"),
+            _hash_sum(df.schema).alias("h"),
         )
         df.write.mode("overwrite").parquet(data_path)
         out = self.spark.read.parquet(data_path)

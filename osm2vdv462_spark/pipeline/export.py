@@ -230,9 +230,9 @@ def _stop_place_templates(spark: SparkSession) -> dict:
     the same tree is valid for every DataFrame of the export shape —
     but each fresh build costs ~2-3 s of py4j round trips (the DELFI
     ladders are thousands of Column ops), which the e2e pipeline paid on
-    every run. Same per-session memo pattern as jvm_pip._AUTO_BUILD_CACHE
-    and pipeline_queries._stages; keyed on applicationId so a new
-    session rebuilds against its own JVM objects."""
+    every run. Same per-session memo pattern as jvm_pip._AUTO_BUILD_CACHE;
+    keyed on applicationId so a new session rebuilds against its own JVM
+    objects."""
     key = spark.sparkContext.applicationId
     hit = _TEMPLATE_CACHE.get(key)
     if hit is not None:
@@ -421,12 +421,6 @@ def xml_stop_places(export_df: DataFrame) -> DataFrame:
                     lambda s: s["frag"],
                 ),
             ).alias("children"),
-        )
-        .withColumn(
-            "cat_xml",
-            F.concat(
-                F.lit("<"), F.lit("").cast("string"), F.lit(""),
-            ),
         )
     )
     wrapper = F.lit("")

@@ -6,6 +6,8 @@ export, the five stages of the reference's export.sh) through
 StageCheckpoint: every stage materializes to parquet + manifest, reruns
 skip validated stages, and the final NeTEx document is written only from
 materialized inputs. This is the engine's `spark-submit` entry body.
+``run_stages`` is the DAG without the document; the gated pipeline
+queries (queries/pipeline_queries.py) read its stage tables.
 
 * Stage DAG: each stage names the stages it reads and goes to a small
   thread pool in topological order. The pool is FIFO, so a stage only
@@ -138,20 +140,19 @@ class StageDag:
         return {n: f.result() for n, f in self._futures.items()}
 
 
-def run_full_pipeline(
+def run_stages(
     spark: SparkSession,
     workdir: str,
     n_areas: int = 4,
     seed: int = 42,
-    timestamp: str = "2024-01-01T00:00:00",
     pbf_path: str | None = None,
-) -> dict:
-    """Returns {'document': path, 'stats': per-stage stats dict}.
+) -> tuple[dict, dict]:
+    """Runs the stage DAG into ``workdir`` and returns (results, stats).
 
-    ``pbf_path``: ingest from a REAL .osm.pbf extract (sources/pbf.py
-    scan + dispatch + way-geometry assembly) instead of the synthetic
-    world — the reference's production scenario; organisations then
-    start empty (supply the CSV source separately if available)."""
+    ``results`` maps each checkpoint stage name to its frame (read back
+    from the stage's parquet), plus ``parking_xml`` / ``organisation_xml``
+    to their collected fragment lists; ``stats`` holds each stage's
+    checkpoint stats, in DAG order. Arguments as for run_full_pipeline."""
     os.makedirs(workdir, exist_ok=True)
     ck = StageCheckpoint(spark, workdir)
     # overlap the ~2-3 s XML-template construction with the stage jobs
@@ -306,6 +307,25 @@ def run_full_pipeline(
     except BaseException:
         release(scan_cached + merge_cached + stitch_cached)()
         raise
+    # stats in DAG order, not completion order
+    return res, {n: ck.stats[n] for n in res if n in ck.stats}
+
+
+def run_full_pipeline(
+    spark: SparkSession,
+    workdir: str,
+    n_areas: int = 4,
+    seed: int = 42,
+    timestamp: str = "2024-01-01T00:00:00",
+    pbf_path: str | None = None,
+) -> dict:
+    """Returns {'document': path, 'stats': per-stage stats dict}.
+
+    ``pbf_path``: ingest from a REAL .osm.pbf extract (sources/pbf.py
+    scan + dispatch + way-geometry assembly) instead of the synthetic
+    world — the reference's production scenario; organisations then
+    start empty (supply the CSV source separately if available)."""
+    res, stats = run_stages(spark, workdir, n_areas, seed, pbf_path)
     doc = ex_mod.assemble_document(
         ex_mod.xml_stop_places(res["export_data"]),
         res["parking_xml"],
@@ -315,6 +335,4 @@ def run_full_pipeline(
     doc_path = os.path.join(workdir, "netex_export.xml")
     with open(doc_path, "w") as fh:
         fh.write(doc)
-    # stats in DAG order, not completion order
-    return {"document": doc_path,
-            "stats": {n: ck.stats[n] for n in res if n in ck.stats}}
+    return {"document": doc_path, "stats": stats}

@@ -13,14 +13,21 @@ pathological fixtures the closed forms don't reach.
 
 The world is seeded per sf_dir (more areas at bigger sf); the oracles
 derive the same area count from the customer view's row count.
+
+Every query reads the stage tables of the export's own stage DAG
+(pipeline/runner.run_stages), run once per (session, sf): the gate
+checks the stages the export writes, not a second wiring of them.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..pipeline import routing, stop_places as sp
-from ..pipeline.world import world_dfs
+from ..pipeline import export as ex_mod, runner
 from . import register
 
 
@@ -173,63 +180,28 @@ ORDER BY relation_id, node_id, level
 )
 
 
-def _world(spark: SparkSession, sf_dir: str):
-    return world_dfs(spark, n_areas=_n_areas(sf_dir), seed=42)
-
-
 _memo: dict = {}
 
 
-def _stages(spark: SparkSession, sf_dir: str):
-    """Build the shared DAG once per (session, sf): the quay/entrance
-    views are re-used by several queries AND self-joined inside
-    stop_area_edges — without materialization Catalyst would re-execute
-    the whole width/split/merge/connected-components subplan per branch
-    (this is the engine's stage-checkpoint pattern, SURVEY.md §4 item 6;
-    localCheckpoint stands in for the Iceberg stage tables here)."""
+def _stages(spark: SparkSession, sf_dir: str) -> dict:
+    """The export's stage frames by stage name (runner.run_stages) over
+    this sf's synthetic world, run once per (session, sf). The workdir
+    lives until the process exits: the frames read its parquet."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _memo:
-        return _memo[key]
-    # the synthetic world is town-sized (10^1..10^2 rows per table): wide
-    # shuffles only add task/metadata overhead (and blow a default 1g
-    # local-mode heap across the DAG's ~200 stages). Scope a small
-    # parallelism to THIS DAG only — every stage below ends in an eager
-    # localCheckpoint, so the setting is irrelevant after restore.
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        w = _world(spark, sf_dir)
-        pww = sp.platforms_with_width(w["platforms"]).localCheckpoint(eager=True)
-        split = sp.platforms_split(pww, w["platforms_edges"]).localCheckpoint(
-            eager=True
+    if key not in _memo:
+        workdir = tempfile.mkdtemp(prefix="pipeline_stages_")
+        atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+        _memo[key], _ = runner.run_stages(
+            spark, workdir, n_areas=_n_areas(sf_dir), seed=42
         )
-        merged = sp.platforms_merged(split).localCheckpoint(eager=True)
-        fq = sp.final_quays(merged, w["stop_areas_members_ref"]).localCheckpoint(
-            eager=True
-        )
-        fe = sp.final_entrances(
-            w["entrances"], w["stop_areas_members_ref"]
-        ).localCheckpoint(eager=True)
-        edges = routing.stop_area_edges(fq, fe).localCheckpoint(eager=True)
-        links, access, refs = routing.stitch_path_links(
-            routing.synthesize_routes(edges)
-        )
-        links = links.localCheckpoint(eager=True)
-        access = access.localCheckpoint(eager=True)
-        refs = refs.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    out = {"world": w, "merged": merged, "fq": fq, "fe": fe, "edges": edges,
-           "links": links, "access": access, "refs": refs}
-    _memo[key] = out
-    return out
+    return _memo[key]
 
 
 @register("final_quays_pipeline", _QUAYS_SQL)
 def final_quays_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full platform DAG: width -> split -> DBSCAN merge -> membership
     join (ref stop_places.sql:961-1077)."""
-    fq = _stages(spark, sf_dir)["fq"]
+    fq = _stages(spark, sf_dir)["final_quays"]
     return fq.select(
         "relation_id",
         "osm_id",
@@ -243,7 +215,7 @@ def final_quays_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("path_links_pipeline", _LINKS_SQL)
 def path_links_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edges fan-out -> synth routes -> R1-R5 stitcher (ref ppr.py)."""
-    links = _stages(spark, sf_dir)["links"]
+    links = _stages(spark, sf_dir)["path_links"]
     return links.select(
         "stop_area_relation_id",
         F.col("edge.fromIFOPT").alias("from_ifopt"),
@@ -266,68 +238,18 @@ def netex_stop_places_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (quays/entrances/access spaces/path links, DELFI key
     lists, levels, centroids, content-hash link ids) from the
     closed-form world in plain DuckDB SQL."""
-    from ..pipeline import export as ex_mod
-
-    # overlap the ~2-3 s XML-template py4j construction with the stage
-    # jobs of _stages + the export phase (no-op once per-app cache warm)
-    ex_mod.prewarm_templates(spark)
-    st = _stages(spark, sf_dir)
-    w = st["world"]
-    # same small-parallelism scoping as _stages: the export phase runs
-    # ~6 eager jobs on a town-sized world — under the driver's plain
-    # session (200 shuffle partitions) task scheduling, not work,
-    # dominates. Every stage ends in an eager localCheckpoint, so the
-    # setting never leaks past this function.
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        facc = sp.final_access_spaces(st["access"], w["pois"]).localCheckpoint(
-            eager=True
-        )
-        fspl = routing.final_site_path_links(
-            st["links"], st["refs"], w["highways"]
-        ).localCheckpoint(eager=True)
-        spo = ex_mod.stop_places_with_organisations(
-            w["stop_areas"], w["organisations"]
-        )
-        spg = ex_mod.stop_places_with_geometry(
-            spo, w["stop_areas_members_ref"], w["platforms"]
-        )
-        fsp = ex_mod.final_stop_places(spg, st["fq"], st["fe"], facc).localCheckpoint(
-            eager=True
-        )
-        # the XML build is a very large expression tree (DELFI ladders
-        # inline the parsers many times); cutting lineage here keeps the
-        # optimizer + codegen within a default-sized (1g) driver heap
-        ed = ex_mod.export_data(fsp, st["fq"], st["fe"], facc, fspl).localCheckpoint(
-            eager=True
-        )
-        # the fragment ladders exceed janino's method limits under a 1g
-        # driver: whole-stage codegen ATTEMPTS the compile, fails, and
-        # retries on every execution (failures are not cached) — measured
-        # 14.6s vs 6.1s for the identical plan interpreted. Pin the
-        # interpreted expression path for THIS phase only; on a cluster
-        # with a sized driver heap re-enable and split the ladders
-        # instead. (Per-element cost is string building either way.)
-        prior_ws = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-        prior_fm = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-        try:
-            xml = ex_mod.xml_stop_places(ed).localCheckpoint(eager=True)
-        finally:
-            spark.conf.set("spark.sql.codegen.wholeStage", prior_ws)
-            spark.conf.set("spark.sql.codegen.factoryMode", prior_fm)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prior)
-    return xml.select("relation_id", "xml").orderBy("relation_id")
+    ed = _stages(spark, sf_dir)["export_data"]
+    return (
+        ex_mod.xml_stop_places(ed).select("relation_id", "xml")
+        .orderBy("relation_id")
+    )
 
 
 @register("access_spaces_pipeline", _ACCESS_SQL)
 def access_spaces_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derived access spaces with (node_id, level) PK dedup
     (ref ppr.py:99-125 + 02_setup.sql:90-97)."""
-    access = _stages(spark, sf_dir)["access"]
+    access = _stages(spark, sf_dir)["access_spaces"]
     return access.select("relation_id", "node_id", "level", "IFOPT").orderBy(
         "relation_id", "node_id", "level"
     )
@@ -368,18 +290,7 @@ def export_data_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the full 4-way union + area join, checked against the world's
     closed forms (the XML rendering itself is byte-gated by
     netex_stop_places_xml)."""
-    from ..pipeline import export as ex_mod
-
-    st = _stages(spark, sf_dir)
-    w = st["world"]
-    facc = sp.final_access_spaces(st["access"], w["pois"])
-    fspl = routing.final_site_path_links(st["links"], st["refs"], w["highways"])
-    spo = ex_mod.stop_places_with_organisations(w["stop_areas"], w["organisations"])
-    spg = ex_mod.stop_places_with_geometry(
-        spo, w["stop_areas_members_ref"], w["platforms"]
-    )
-    fsp = ex_mod.final_stop_places(spg, st["fq"], st["fe"], facc)
-    ed = ex_mod.export_data(fsp, st["fq"], st["fe"], facc, fspl)
+    ed = _stages(spark, sf_dir)["export_data"]
     return (
         ed.filter(F.col("category") != "STOP_PLACE")
         .groupBy("relation_id", "category")
@@ -427,8 +338,8 @@ def parkings_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Parking fragment. The oracle rebuilds the exact XML (centroid at the
     world rect's closed-form center, fixed-8dp trimmed rendering) from
     the area enumeration, so the document body is value-hash gated."""
-    from ..pipeline import export as ex_mod
-
-    w = _stages(spark, sf_dir)["world"]
-    epd = ex_mod.export_parkings_data(w["parking"], w["stop_areas_members_ref"])
+    st = _stages(spark, sf_dir)
+    epd = ex_mod.export_parkings_data(
+        st["world_parking"], st["world_stop_areas_members_ref"]
+    )
     return ex_mod.xml_parkings(epd).orderBy("relation_id")

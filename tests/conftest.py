@@ -54,6 +54,8 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.slow)
         elif mod == "test_checkpoint" and item.name in runner_quick:
             item.add_marker(pytest.mark.quick)
+        elif mod == "test_session_scope":  # the gate's session hygiene
+            item.add_marker(pytest.mark.quick)
         elif mod not in seen_mod:
             # one representative per operator-family module
             item.add_marker(pytest.mark.quick)
