@@ -26,6 +26,7 @@ WKB decode stays in the numpy kernel).
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..geo import cells as _cells
@@ -85,9 +86,11 @@ def _target_cell_arrays(
     target, so pick ``res`` such that a cell holds O(1..10) targets.
 
     Returns (cell_ids[n], ids[n,K] with -1 padding, lon[n,K], lat[n,K]
-    NaN-padded, all_targets) — numpy end to end so the caller can hand
-    the broadcast map to Spark as one Arrow table (the per-cell Python
-    tuple build used to dominate the whole operator's wall time)."""
+    NaN-padded, all_targets) with ``all_targets`` the (ids, lon, lat)
+    arrays of every target in id order — numpy end to end so the caller
+    can hand the broadcast map to Spark as one Arrow table (the per-cell
+    Python tuple build used to dominate the whole operator's wall
+    time)."""
     ids = np.array([t[0] for t in trows], np.int64)
     tlon = np.array([t[1] for t in trows], np.float64)
     tlat = np.array([t[2] for t in trows], np.float64)
@@ -124,9 +127,10 @@ def _target_cell_arrays(
     # sqrt(d2ub)) lie within DY = ceil(sqrt(2)*(pad+1))+1 rows and
     # DX = ceil(DY/cos(lat bound))+1 columns of the chunk's cell bbox.
     # Targets outside the y-window are excluded by their lat gap alone,
-    # so the cos bound only needs to hold for targets INSIDE it.
+    # so the cos bound only needs to hold for targets INSIDE it. The
+    # prune runs at every target count: its O(nt) mask per chunk is far
+    # cheaper than the (chunk x nt) bound arithmetic it saves.
     DY = int(np.ceil(np.sqrt(2.0) * (pad_cells + 1))) + 1
-    prune = len(ids) > 2048  # windowing costs an O(nt) mask per chunk
     # preallocated, REUSED chunk buffers with out= everywhere: on this
     # sandbox kernel first-touch page faults cost ~10-25 ms/MB, so fresh
     # (cells x targets) temporaries dominated the whole map build.
@@ -144,27 +148,20 @@ def _target_cell_arrays(
         m = min(CH, len(cell_ids) - s)
         x0 = cx0[s : s + m][:, None]
         y0 = cy0[s : s + m][:, None]
-        if prune:
-            cs = slice(s, s + m)
-            lat_bound = min(
-                89.0, float(np.abs(cy0[cs]).max()) + (DY + 1) * d
-            )
-            cosb = float(np.cos(np.radians(lat_bound)))
-            DX = max(DY, int(np.ceil(DY / max(cosb, 1e-6))) + 1)
-            widx = np.nonzero(
-                (tiy_o >= int(iy[cs].min()) - DY)
-                & (tiy_o <= int(iy[cs].max()) + DY)
-                & (tix_o >= int(ix[cs].min()) - DX)
-                & (tix_o <= int(ix[cs].max()) + DX)
-            )[0]
-            w = len(widx)
-            if w == 0:  # unreachable: each cell's generator is in-window
-                continue
-            Tl, Tt, Ta = T_lon[:, widx], T_lat[:, widx], abs_tlat[:, widx]
-        else:
-            w = nt
-            widx = None
-            Tl, Tt, Ta = T_lon, T_lat, abs_tlat
+        cs = slice(s, s + m)
+        lat_bound = min(89.0, float(np.abs(cy0[cs]).max()) + (DY + 1) * d)
+        cosb = float(np.cos(np.radians(lat_bound)))
+        DX = max(DY, int(np.ceil(DY / max(cosb, 1e-6))) + 1)
+        widx = np.nonzero(
+            (tiy_o >= int(iy[cs].min()) - DY)
+            & (tiy_o <= int(iy[cs].max()) + DY)
+            & (tix_o >= int(ix[cs].min()) - DX)
+            & (tix_o <= int(ix[cs].max()) + DX)
+        )[0]
+        w = len(widx)
+        if w == 0:  # unreachable: each cell's generator is in-window
+            continue
+        Tl, Tt, Ta = T_lon[:, widx], T_lat[:, widx], abs_tlat[:, widx]
         a, b, u, v = fx[:m, :w], fy[:m, :w], t1[:m, :w], t2[:m, :w]
         # farthest-edge degree distances; gaps follow as f - d clipped
         # (R*radians is linear: every bound compares in degree^2 space)
@@ -201,12 +198,10 @@ def _target_cell_arrays(
         # resolution can never be accepted on K. The probe's budget-
         # accept path rebuilds the chosen res in full (built is None).
         if abort_k is not None and int(keep_sorted.sum(axis=1).max()) > abort_k:
-            all_t = [(int(ids[i]), float(tlon[i]), float(tlat[i])) for i in order]
-            return cell_ids, None, None, None, all_t
+            return cell_ids, None, None, None, (ids_o, lon_o, lat_o)
         ck, ti = np.nonzero(keep_sorted)
-        if widx is not None:
-            ti = widx[ti]  # ascending widx keeps slot order id-ascending
-        rows.append((ck + s, ti))
+        # ascending widx keeps slot order id-ascending
+        rows.append((ck + s, widx[ti]))
     if rows:
         ck = np.concatenate([r[0] for r in rows])
         ti = np.concatenate([r[1] for r in rows])
@@ -224,27 +219,46 @@ def _target_cell_arrays(
     ids_mat[ck, pos] = ids_o[ti]
     lon_mat[ck, pos] = lon_o[ti]
     lat_mat[ck, pos] = lat_o[ti]
-    all_t = [(int(ids[i]), float(tlon[i]), float(tlat[i])) for i in order]
-    return cell_ids, ids_mat, lon_mat, lat_mat, all_t
+    return cell_ids, ids_mat, lon_mat, lat_mat, (ids_o, lon_o, lat_o)
 
 
-def _target_cell_rows(
-    trows: list[tuple], res: int, pad_cells: int = 4
-) -> tuple[list[tuple], list]:
-    """Tuple-row view of _target_cell_arrays (the array-of-struct map
-    used by pip_knn_assign_jvm)."""
-    cell_ids, ids_mat, lon_mat, lat_mat, all_t = _target_cell_arrays(
-        trows, res, pad_cells
+_SEG_COLS = ("x0", "y0", "x1", "y1")
+
+
+def _local_frame(spark, cols: dict) -> DataFrame:
+    """Driver-local frame (a LocalTableScan, no Python worker) from
+    ``{name: numpy or Arrow array}``, every top-level column non-nullable
+    so the generated code carries no null checks for them."""
+    arrs = [c if isinstance(c, pa.Array) else pa.array(c)
+            for c in cols.values()]
+    return spark.createDataFrame(pa.Table.from_arrays(arrs, schema=pa.schema(
+        [pa.field(n, a.type, nullable=False) for n, a in zip(cols, arrs)]
+    )))
+
+
+def _cand_lists(offsets, ids, lon, lat):
+    """Arrow list<struct<id, lon, lat>>: the flat candidates split into
+    one list per row at ``offsets`` (len = rows + 1)."""
+    fields = [pa.field("id", pa.int64(), False),
+              pa.field("lon", pa.float64(), False),
+              pa.field("lat", pa.float64(), False)]
+    vals = pa.StructArray.from_arrays(
+        [pa.array(ids, pa.int64()), pa.array(lon, pa.float64()),
+         pa.array(lat, pa.float64())], fields=fields,
     )
-    out: list[tuple] = []
-    for i in range(len(cell_ids)):
-        k = ids_mat[i] >= 0
-        out.append(
-            (int(cell_ids[i]),
-             [(int(a), float(b), float(c))
-              for a, b, c in zip(ids_mat[i][k], lon_mat[i][k], lat_mat[i][k])])
-        )
-    return out, all_t
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()), vals,
+        type=pa.list_(pa.field("element", pa.struct(fields), False)),
+    )
+
+
+def _fallback_frame(spark, all_t) -> DataFrame:
+    """One row holding the full target list (``_cands_all``): the exact
+    nearest for points outside the mapped region."""
+    ids = all_t[0]
+    return _local_frame(
+        spark, {"_cands_all": _cand_lists([0, len(ids)], *all_t)}
+    )
 
 
 def _inside(segs: Column, lon: Column, lat: Column) -> Column:
@@ -359,10 +373,6 @@ def _auto_target_build(
     return choice, built
 
 
-_SEGS_T = "array<struct<x0:double,y0:double,x1:double,y1:double>>"
-_CAND_T = "array<struct<id:bigint,lon:double,lat:double>>"
-
-
 def pip_knn_assign_jvm(
     points_df: DataFrame,
     polys_df: DataFrame,
@@ -396,13 +406,27 @@ def pip_knn_assign_jvm(
             target_pad_cells = auto_pad
     elif target_pad_cells is None:
         target_pad_cells = _pad_for(target_res)
-    pm = spark.createDataFrame(
-        _poly_cell_rows(prows, poly_res),
-        f"_pc bigint, _polys array<struct<pid:bigint,segs:{_SEGS_T}>>",
+    pcell = _poly_cell_rows(prows, poly_res)
+    seg_t = pa.list_(pa.struct([(c, pa.float64()) for c in _SEG_COLS]))
+    pm = _local_frame(spark, {
+        "_pc": np.array([c for c, _ in pcell], np.int64),
+        "_polys": pa.array(
+            [v for _, v in pcell],
+            pa.list_(pa.struct([("pid", pa.int64()), ("segs", seg_t)])),
+        ),
+    })
+    cell_ids, ids_mat, lon_mat, lat_mat, all_t = _target_cell_arrays(
+        trows, target_res, target_pad_cells
     )
-    trow_list, all_t = _target_cell_rows(trows, target_res, target_pad_cells)
-    tm = spark.createDataFrame(trow_list, f"_tc bigint, _cands {_CAND_T}")
-    fallback = spark.createDataFrame([(all_t,)], f"_cands_all {_CAND_T}")
+    valid = ids_mat >= 0  # a cell's slots are filled from slot 0 on
+    tm = _local_frame(spark, {
+        "_tc": cell_ids,
+        "_cands": _cand_lists(
+            np.concatenate(([0], np.cumsum(valid.sum(axis=1)))),
+            ids_mat[valid], lon_mat[valid], lat_mat[valid],
+        ),
+    })
+    fallback = _fallback_frame(spark, all_t)
 
     LON, LAT = F.col(lon), F.col(lat)
     pts = points_df.select(*point_keep, lon, lat).withColumns(
@@ -415,17 +439,14 @@ def pip_knn_assign_jvm(
         F.broadcast(pm), "_pc", "left"
     )
     # exact fallback for points whose cell is outside the mapped target
-    # region, paid ONLY by those rows. Every join here is a broadcast
-    # HASH join (anti on the mapped cells, then a constant-key equi join
-    # to attach the full list) — a nested-loop join against the 1-row
-    # full-list frame would knock its whole subtree out of whole-stage
-    # codegen (measured 10x slowdown of the full operator)
+    # region, paid ONLY by those rows: an anti hash join on the mapped
+    # cells, then a broadcast cross join attaching the one-row full
+    # list (a codegen'd BroadcastNestedLoopJoin, the same plan Spark
+    # makes of a constant-key equi join)
     strays = (
         pts.join(F.broadcast(tm.select("_tc")), "_tc", "left_anti")
         .join(F.broadcast(pm), "_pc", "left")
-        .withColumn("_k", F.lit(1))
-        .join(F.broadcast(fallback.withColumn("_k", F.lit(1))), "_k")
-        .drop("_k")
+        .crossJoin(F.broadcast(fallback))
         .withColumnRenamed("_cands_all", "_cands")
         .select(*matched.columns)
     )
@@ -456,8 +477,74 @@ def pip_knn_assign_jvm(
 # ------------------------------------------------- unrolled codegen variant
 
 
-def _pad(lst, n, fill):
-    return lst + [fill] * (n - len(lst))
+def _cell_polys(cells: np.ndarray, pcell: list[tuple]) -> list[tuple]:
+    """(row, polys) for the rows of the sorted ``cells`` that
+    ``pcell`` (from _poly_cell_rows at the same res) lists polygons for."""
+    if not pcell or not len(cells):
+        return []
+    pc = np.array([c for c, _ in pcell], np.int64)
+    row = np.minimum(np.searchsorted(cells, pc), len(cells) - 1)
+    return [(int(i), v) for i, ok, (_, v) in zip(row, cells[row] == pc, pcell)
+            if ok]
+
+
+def _poly_slot_cols(n: int, hits: list[tuple], P: int, S: int) -> dict:
+    """P polygon slots of S segments per row (``_p{p}_id``,
+    ``_p{p}s{s}_{x0,y0,x1,y1}``). Empty slots and padding segments are
+    (0, 0, 0, 0): y0 == y1, so they never cross a ray and a slot
+    without a polygon has even parity — no null slots to guard."""
+    pid = np.zeros((n, P), np.int64)
+    seg = np.zeros((n, P, S, 4))
+    for i, v in hits:
+        for p, (q, segs) in enumerate(v):
+            pid[i, p] = q
+            seg[i, p, : len(segs)] = segs
+    cols: dict = {}
+    for p in range(P):
+        cols[f"_p{p}_id"] = pid[:, p]
+        for s in range(S):
+            for j, c in enumerate(_SEG_COLS):
+                cols[f"_p{p}s{s}_{c}"] = seg[:, p, s, j]
+    return cols
+
+
+def _target_slot_cols(ids_mat, lon_mat, lat_mat, K: int) -> dict:
+    """K (id, lon, lat) target slots per row. Every mapped cell lists at
+    least one target, so empty slots (and the slots past the built width,
+    up to the K floor) repeat slot 0: a repeated candidate cannot change
+    the (dist, id) minimum, and no slot is null."""
+    w = ids_mat.shape[1]
+    if w == 0:  # no targets, hence no mapped cells
+        return {f"_t{k}_{c}": np.zeros(0, t) for k in range(K)
+                for c, t in (("id", np.int64), ("lon", float), ("lat", float))}
+    slot = np.where(np.arange(K) < w, np.arange(K), 0)
+    src = np.where(ids_mat[:, slot] >= 0, slot, 0)
+    ids, lo, la = (np.take_along_axis(m, src, axis=1)
+                   for m in (ids_mat, lon_mat, lat_mat))
+    cols: dict = {}
+    for k in range(K):
+        cols.update({f"_t{k}_id": ids[:, k], f"_t{k}_lon": lo[:, k],
+                     f"_t{k}_lat": la[:, k]})
+    return cols
+
+
+def _pid_sql(P: int, S: int, lonq: str, latq: str) -> str:
+    """Unrolled ray-cast parity per polygon slot; LEAST over the matching
+    slots' ids == array_min of the filtered pids (NULL if none)."""
+    hits = []
+    for p in range(P):
+        terms = []
+        for s in range(S):
+            x0, y0, x1, y1 = (f"_p{p}s{s}_{c}" for c in _SEG_COLS)
+            terms.append(
+                f"CASE WHEN (({y0} > {latq}) != ({y1} > {latq})) AND "
+                f"({lonq} < {x0} + ({latq} - {y0}) / ({y1} - {y0})"
+                f" * ({x1} - {x0})) THEN 1 ELSE 0 END"
+            )
+        hits.append(
+            f"CASE WHEN (({' + '.join(terms)}) % 2 = 1) THEN _p{p}_id END"
+        )
+    return hits[0] if P == 1 else "LEAST(" + ", ".join(hits) + ")"
 
 
 def pip_knn_assign_codegen(
@@ -489,15 +576,29 @@ def pip_knn_assign_codegen(
     config ({target_res, target_pad_cells, K, P, S}) — the knobs that
     set generated-method size and therefore which side of the JIT
     cliff the plan lands on (r3 verdict: the warm bench number is not
-    attributable without them).
+    attributable without them). P counts polygon slots of the fused
+    map, i.e. at ``target_res``.
 
     Higher-order functions (the pip_knn_assign_jvm variant) run on the
     interpreted expression path — measured here: ~65k rows/s/core and
     ~0.3 thread-scaling efficiency (allocation-bound megamorphic eval).
     A plain-JVM compute loop on the same box scales 8->32 threads at
     0.88; unrolling the bounded per-cell candidates into scalar columns
-    puts the flagship on that path: least(struct(haversine_k, id_k)...)
-    for the (dist, id) minimum and an unrolled ray-cast parity CASE sum.
+    puts the flagship on that path.
+
+    Plan: every point inside the mapped target region takes ONE inner
+    broadcast hash join on its ``target_res`` cell against a single
+    driver-local map whose row carries both the cell's K target slots
+    and its P polygon slots (S segments each), every column
+    non-nullable. The nearest target is taken on scalars: the K
+    haversines ``_d{k}`` in one projection, ``dist_m = LEAST(_d*)``,
+    then ``id = LEAST(CASE WHEN _dk = dist_m THEN _tk_id END)`` — the
+    exact (dist, id) tie-break without a struct per slot. Each of the
+    three projections reads the previous one's columns more than once,
+    so CollapseProject keeps them apart and no haversine is evaluated
+    twice. The stop area is an unrolled ray-cast parity CASE sum. Points
+    outside the mapped region (strays) take a polygon map keyed at
+    ``poly_res`` and the exact full-list HOF minimum.
 
     Boundedness is a DESIGN property, not a bench hack: per-cell
     candidate counts are bounded by local target density at the chosen
@@ -524,15 +625,18 @@ def pip_knn_assign_codegen(
             target_pad_cells = _pad_for(target_res)
         built = _target_cell_arrays(trows, target_res, target_pad_cells)
 
-    pcell = _poly_cell_rows(prows, poly_res)
-    P = max((len(v) for _, v in pcell), default=1)
-    S = max((len(segs) for _, v in pcell for _, segs in v), default=1)
     tc_ids, tc_id_mat, tc_lon_mat, tc_lat_mat, all_t = built
     K = max(2, tc_id_mat.shape[1])
-    if P > max_slots or S > max_segs or K > 4 * max_slots:
+    t_hits = _cell_polys(tc_ids, _poly_cell_rows(prows, target_res))
+    P = max((len(v) for _, v in t_hits), default=1)
+    pcell = [] if assume_covered else _poly_cell_rows(prows, poly_res)
+    P_s = max((len(v) for _, v in pcell), default=1)
+    S = max((len(segs) for _, v in t_hits + pcell for _, segs in v), default=1)
+    if max(P, P_s) > max_slots or S > max_segs or K > 4 * max_slots:
         raise ValueError(
-            f"candidate bounds exceeded (P={P}, S={S}, K={K}) — subdivide "
-            "polygons / refine target_res, or use pip_knn_assign_jvm"
+            f"candidate bounds exceeded (P={max(P, P_s)}, S={S}, K={K}) — "
+            "subdivide polygons / refine target_res, or use "
+            "pip_knn_assign_jvm"
         )
     if report is not None:
         report.update(
@@ -543,102 +647,33 @@ def pip_knn_assign_codegen(
             S=S,
         )
 
-    # polygon map: one row per cell; P poly slots x (pid + S segments).
-    # The built frame is memoized per (app, dim content, res) — the
-    # dims are still collected and fingerprinted on EVERY call (no
-    # cross-run result reuse), only the driver-side frame construction
-    # is skipped when the collected content is unchanged (same pattern
-    # as _AUTO_BUILD_CACHE above).
-    pm_key = (
-        spark.sparkContext.applicationId,
-        hash(tuple((r[0], bytes(r[1])) for r in prows)),
-        poly_res, P, S,
-    )
-    pm = _DIM_FRAME_CACHE.get(pm_key)
-    if pm is None:
-        prow_flat = []
-        for c, v in pcell:
-            row = [c]
-            for p in range(P):
-                if p < len(v):
-                    pid, segs = v[p]
-                    row.append(pid)
-                    flat = [
-                        x for s in _pad(list(segs), S, (None,) * 4) for x in s
-                    ]
-                else:
-                    row.append(None)
-                    flat = [None] * (4 * S)
-                row.extend(flat)
-            prow_flat.append(tuple(row))
-        pcols = ["_pc bigint"]
-        for p in range(P):
-            pcols.append(f"_p{p}_id bigint")
-            for s in range(S):
-                pcols.extend(
-                    f"_p{p}s{s}_{c} double" for c in ("x0", "y0", "x1", "y1")
-                )
-        pm = spark.createDataFrame(prow_flat, ", ".join(pcols))
-        _dim_cache_put(pm_key, pm)
-
-    # target map: one row per cell; K (id, lon, lat) slots. Built as ONE
-    # Arrow table straight from the numpy matrices — no per-row Python
-    # tuples (that conversion used to cost more than the query itself).
-    # Memoized per (app, collected content, res) like the polygon map.
-    tm_key = (
-        spark.sparkContext.applicationId,
-        hash(tuple(trows)), target_res, target_pad_cells, K,
-    )
-    hit = _DIM_FRAME_CACHE.get(tm_key)
-    if hit is not None:
-        tm, fallback = hit
-    else:
-        import pyarrow as pa
-
-        n_cells = len(tc_ids)
-        tdata: dict = {
-            "_tc": pa.array(tc_ids.astype(np.int64), type=pa.int64())
-        }
-        for k in range(K):
-            if k < tc_id_mat.shape[1]:
-                col = tc_id_mat[:, k]
-                tdata[f"_t{k}_id"] = pa.array(
-                    col, mask=col < 0, type=pa.int64()
-                )
-                tdata[f"_t{k}_lon"] = pa.array(
-                    tc_lon_mat[:, k], type=pa.float64()
-                )
-                tdata[f"_t{k}_lat"] = pa.array(
-                    tc_lat_mat[:, k], type=pa.float64()
-                )
-            else:  # K floor of 2 (least() needs two operands): null slot
-                tdata[f"_t{k}_id"] = pa.nulls(n_cells, pa.int64())
-                tdata[f"_t{k}_lon"] = pa.nulls(n_cells, pa.float64())
-                tdata[f"_t{k}_lat"] = pa.nulls(n_cells, pa.float64())
-        tm = spark.createDataFrame(pa.table(tdata))
-        # the rare out-of-region stragglers take the ARRAY full list +
-        # HOF minimum (exact; interpreted is fine on a ~0-row branch —
-        # unrolling it would force K = n_targets columns on every row)
-        fallback = spark.createDataFrame([(all_t,)], f"_cands_all {_CAND_T}")
-        _dim_cache_put(tm_key, (tm, fallback))
+    # the fused map: one row per mapped target cell, K target slots and
+    # P polygon slots, built once per call as one Arrow table. The frame
+    # is memoized per (app, collected dim content, shape) — the dims are
+    # still collected and fingerprinted on EVERY call (no cross-run
+    # result reuse), only the driver-side construction is skipped when
+    # the collected content is unchanged (same pattern as
+    # _AUTO_BUILD_CACHE above).
+    app = spark.sparkContext.applicationId
+    p_hash = hash(tuple((r[0], bytes(r[1])) for r in prows))
+    t_hash = hash(tuple(trows))
+    fm_key = (app, "map", p_hash, t_hash, target_res, target_pad_cells,
+              K, P, S)
+    fm = _DIM_FRAME_CACHE.get(fm_key)
+    if fm is None:
+        fm = _local_frame(spark, {
+            "_tc": tc_ids.astype(np.int64),
+            **_target_slot_cols(tc_id_mat, tc_lon_mat, tc_lat_mat, K),
+            **_poly_slot_cols(len(tc_ids), t_hits, P, S),
+        })
+        _dim_cache_put(fm_key, fm)
 
     LON, LAT = F.col(lon), F.col(lat)
-    pts = points_df.select(*point_keep, lon, lat).withColumns(
-        {
-            "_pc": cell_expr(LON, LAT, poly_res),
-            "_tc": cell_expr(LON, LAT, target_res),
-        }
+    LONQ, LATQ = f"`{lon}`", f"`{lat}`"
+    pts = points_df.select(*point_keep, lon, lat).withColumn(
+        "_tc", cell_expr(LON, LAT, target_res)
     )
-    matched = pts.join(F.broadcast(tm), "_tc", "inner").join(
-        F.broadcast(pm), "_pc", "left"
-    )
-    strays = (
-        pts.join(F.broadcast(tm.select("_tc")), "_tc", "left_anti")
-        .join(F.broadcast(pm), "_pc", "left")
-        .withColumn("_k", F.lit(1))
-        .join(F.broadcast(fallback.withColumn("_k", F.lit(1))), "_k")
-        .drop("_k")
-    )
+    matched = pts.join(F.broadcast(fm), "_tc", "inner")
 
     pid_type = polys_df.select(poly_id).schema[0].dataType.simpleString()
     tid_type = targets_df.select(target_id).schema[0].dataType.simpleString()
@@ -649,63 +684,32 @@ def pip_knn_assign_codegen(
     # K=16/S=8 — more than the query's own execution). The parsed trees
     # are node-identical to the Column forms (same functions, same
     # literal types), so plans, codegen and results are unchanged.
-    LONQ, LATQ = f"`{lon}`", f"`{lat}`"
-
-    def pid_sql() -> str:
-        # PIP: unrolled ray-cast parity per poly slot; least() over the
-        # matching slots' ids == array_min of the filtered pids
-        hits = []
-        for p in range(P):
-            terms = []
-            for s in range(S):
-                x0, y0 = f"_p{p}s{s}_x0", f"_p{p}s{s}_y0"
-                x1, y1 = f"_p{p}s{s}_x1", f"_p{p}s{s}_y1"
-                terms.append(
-                    f"CASE WHEN (({y0} > {LATQ}) != ({y1} > {LATQ})) AND "
-                    f"({LONQ} < {x0} + ({LATQ} - {y0}) / ({y1} - {y0})"
-                    f" * ({x1} - {x0})) THEN 1 ELSE 0 END"
-                )
-            crossings = " + ".join(terms)
-            hits.append(
-                f"CASE WHEN (({crossings}) % 2 = 1)"
-                f" AND _p{p}_id IS NOT NULL THEN _p{p}_id END"
-            )
-        return hits[0] if P == 1 else "LEAST(" + ", ".join(hits) + ")"
-
-    PID_SQL = pid_sql()
-
-    def render(df: DataFrame, best_id: Column, best_d: Column) -> DataFrame:
-        return df.select(
-            *point_keep,
-            F.expr(PID_SQL).cast(pid_type).alias(poly_id),
-            best_id.cast(tid_type).alias(target_id),
-            best_d.alias("dist_m"),
-        )
-
-    # kNN (hot path): least() over K structs — null slots are skipped,
-    # struct comparison is lexicographic (dist, id): the normative
-    # tie-break. Whole-stage codegen with runtime subexpression
-    # elimination; measured fastest of the formulations tried (scalar
-    # dmin + tie re-scan duplicates the haversine tree K x and stalls;
-    # see BENCH/BASELINE.md round-2 notes).
     from ..geo.columns import haversine_sql
 
-    cand_sql = [
-        f"CASE WHEN _t{k}_id IS NOT NULL THEN named_struct("
-        f"'d', {haversine_sql(LONQ, LATQ, f'_t{k}_lon', f'_t{k}_lat')},"
-        f" 'id', _t{k}_id) END"
-        for k in range(K)
-    ]
     keep_q = [f"`{c}`" for c in point_keep]
-    out_m = matched.selectExpr(
-        *keep_q,
-        f"CAST(({PID_SQL}) AS {pid_type}) AS `{poly_id}`",
-        "LEAST(" + ", ".join(cand_sql) + ") AS _best",
-    ).selectExpr(
-        *keep_q,
-        f"`{poly_id}`",
-        f"CAST(_best.id AS {tid_type}) AS `{target_id}`",
-        "_best.d AS dist_m",
+    ids = [f"_t{k}_id" for k in range(K)]
+    ds = [f"_d{k}" for k in range(K)]
+    nearest_id = ", ".join(
+        f"CASE WHEN _d{k} = dist_m THEN _t{k}_id END" for k in range(K)
+    )
+    pid_sql = _pid_sql(P, S, LONQ, LATQ)
+    out_m = (
+        matched.selectExpr(
+            *keep_q,
+            f"CAST(({pid_sql}) AS {pid_type}) AS `{poly_id}`",
+            *ids,
+            *(f"{haversine_sql(LONQ, LATQ, f'_t{k}_lon', f'_t{k}_lat')}"
+              f" AS _d{k}" for k in range(K)),
+        )
+        .selectExpr(
+            *keep_q, f"`{poly_id}`", *ids, *ds,
+            f"LEAST({', '.join(ds)}) AS dist_m",
+        )
+        .selectExpr(
+            *keep_q, f"`{poly_id}`",
+            f"CAST(LEAST({nearest_id}) AS {tid_type}) AS `{target_id}`",
+            "dist_m",
+        )
     )
     if assume_covered:
         # caller guarantees every point's cell is within the mapped
@@ -713,6 +717,40 @@ def pip_knn_assign_codegen(
         # branch, whose anti-join otherwise re-scans the full input —
         # points outside the region would be DROPPED under this contract
         return out_m
+
+    # strays: the rare points outside the mapped region take a polygon
+    # map keyed at poly_res and the ARRAY full list + HOF minimum (exact;
+    # interpreted is fine on a ~0-row branch — unrolling it would force
+    # K = n_targets columns on every row). An anti hash join on the
+    # mapped cells, a left hash join on the polygon cells, then a
+    # broadcast cross join with the one-row list (a codegen'd
+    # BroadcastNestedLoopJoin).
+    sm_key = (app, "strays", p_hash, t_hash, poly_res, P_s, S)
+    hit = _DIM_FRAME_CACHE.get(sm_key)
+    if hit is None:
+        cells = np.array([c for c, _ in pcell], np.int64)
+        hit = (
+            _local_frame(spark, {
+                "_pc": cells,
+                **_poly_slot_cols(
+                    len(cells), list(enumerate(v for _, v in pcell)), P_s, S
+                ),
+            }),
+            _fallback_frame(spark, all_t),
+        )
+        _dim_cache_put(sm_key, hit)
+    spm, fallback = hit
+    strays = (
+        pts.join(F.broadcast(fm.select("_tc")), "_tc", "left_anti")
+        .withColumn("_pc", cell_expr(LON, LAT, poly_res))
+        .join(F.broadcast(spm), "_pc", "left")
+        .crossJoin(F.broadcast(fallback))
+    )
     best_s = _nearest(F.col("_cands_all"), LON, LAT)
-    out_s = render(strays, best_s["id"], best_s["d"])
+    out_s = strays.select(
+        *point_keep,
+        F.expr(_pid_sql(P_s, S, LONQ, LATQ)).cast(pid_type).alias(poly_id),
+        best_s["id"].cast(tid_type).alias(target_id),
+        best_s["d"].alias("dist_m"),
+    )
     return out_m.unionByName(out_s)

@@ -329,9 +329,11 @@ def fused_assign_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fused_assign_codegen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused PIP + kNN on the UNROLLED whole-stage-codegen plan
-    (operators/jvm_pip.pip_knn_assign_codegen): fixed per-cell candidate
-    slots as scalar columns, least(struct(dist, id)) minimum, unrolled
-    ray-cast parity — the N->4N scaling flagship."""
+    (operators/jvm_pip.pip_knn_assign_codegen): one broadcast hash join
+    per point against a single non-nullable map of fixed per-cell
+    target and polygon slots, the nearest quay taken on scalar
+    haversines (least distance, then the least id at that distance),
+    unrolled ray-cast parity — the N->4N scaling flagship."""
     from ..operators.jvm_pip import pip_knn_assign_codegen
 
     pts = datagen.geo_points(spark, sf_dir)

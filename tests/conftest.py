@@ -56,6 +56,8 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(pytest.mark.quick)
         elif mod == "test_session_scope":  # the gate's session hygiene
             item.add_marker(pytest.mark.quick)
+        elif mod == "test_jvm_pip":  # the geotag operator's plan and map
+            item.add_marker(pytest.mark.quick)
         elif mod not in seen_mod:
             # one representative per operator-family module
             item.add_marker(pytest.mark.quick)
