@@ -255,9 +255,8 @@ def _cand_lists(offsets, ids, lon, lat):
 def _fallback_frame(spark, all_t) -> DataFrame:
     """One row holding the full target list (``_cands_all``): the exact
     nearest for points outside the mapped region."""
-    ids = all_t[0]
     return _local_frame(
-        spark, {"_cands_all": _cand_lists([0, len(ids)], *all_t)}
+        spark, {"_cands_all": _cand_lists([0, len(all_t[0])], *all_t)}
     )
 
 
